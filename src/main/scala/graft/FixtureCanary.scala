@@ -57,7 +57,7 @@ object FixtureCanary {
       val path = s"$sfDir/$table.parquet"
       if (!new java.io.File(path).exists()) Seq(s"$table: fixture file missing at $path")
       else {
-        val schema = spark.read.parquet(path).schema
+        val schema = graft.io.Parquet.schemaOf(spark, path)
         val byName = schema.fields.map(f => f.name -> f.dataType).toMap
         cols.toSeq.sortBy(_._1).flatMap { case (col, ok) =>
           byName.get(col) match {

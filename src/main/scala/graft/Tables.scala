@@ -5,12 +5,14 @@ import org.apache.spark.sql.functions._
 
 /** Loaders for the driver-generated fixtures (TESTDATA.md). Each is a lazy
   * DataFrame over parquet — the Spark analog of the reference's
-  * memory-mapped drive objects (/root/reference/file.cc:935–990): nothing
-  * is materialized until an action, scans are partition/row-group pruned.
+  * memory-mapped drive objects (reference file.cc:935–990): the schema
+  * comes from the file's footer on the driver ([[graft.io.Parquet]]), so
+  * not even a Spark job runs at construction; nothing is materialized
+  * until an action, and scans are partition/row-group pruned.
   */
 object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    graft.io.Parquet.read(spark, s"$dir/$name.parquet")
 
   /** Fan a CPU-heavy-per-row stage out to all cores when the byte-based
     * split heuristic under-partitions (a 0.5 MB parquet of 50k documents

@@ -13,7 +13,8 @@ import org.apache.spark.sql.functions._
   * convention materializes Kerf's maintained sorted-asc attribute
   * (/root/reference/slab.h:234–235, slop.cc:851–871) as Parquet row-group
   * min/max stats that Catalyst prunes on; mmap laziness is
-  * `spark.read.parquet` laziness.
+  * `spark.read.parquet` laziness, with the schema taken from a footer on
+  * the driver ([[Parquet]]).
   */
 /** A folio publish lost its commit race: another writer's version landed
   * between this writer's state read (the basis its merge/manifest was
@@ -43,11 +44,11 @@ object Folio {
       .partitionBy(partitionCols: _*)
       .parquet(path)
 
-  /** Lazy read-back — the mmap moment (file.cc:935–990): nothing is
-    * touched until an action; partition pruning replaces Kerf's
-    * parted-date binary search (presented.h:432). */
+  /** Lazy read-back — the mmap moment (file.cc:935–990): one footer is
+    * read for the schema, no data is touched until an action; partition
+    * pruning replaces Kerf's parted-date binary search (presented.h:432). */
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    Parquet.read(spark, path)
 
   /** Append one new partition-worth of rows (the realtime→historical
     * promotion a tick DB does at day roll: new date dir slots into the
@@ -108,7 +109,7 @@ object Folio {
     // valid folio shares one schema, and a full listing per append would
     // grow with fragmentation (the exact state this append creates)
     firstParquetFile(new java.io.File(target)).foreach { sample =>
-      val stored = df.sparkSession.read.parquet(sample.getAbsolutePath).schema
+      val stored = Parquet.schemaOf(df.sparkSession, sample.getAbsolutePath)
       val dataCols = df.schema.fieldNames.filterNot(partitionCols.contains)
       require(dataCols.toSet == stored.fieldNames.toSet,
         s"appendPartition: batch data columns (${dataCols.sorted.mkString(", ")}) " +
@@ -209,10 +210,7 @@ object Folio {
   /** Read a promoted folio: resolves the `_CURRENT` pointer when present,
     * else falls back to a plain Parquet dir. */
   def promotedRead(spark: SparkSession, path: String): DataFrame =
-    currentVersion(path) match {
-      case Some(v) => spark.read.parquet(s"$path/$v")
-      case None    => spark.read.parquet(path)
-    }
+    currentVersion(path).fold(read(spark, path))(readVersion(spark, path, _))
 
   /** Read the PRE-VERSIONED root content of `path`: root-level parquet
     * files and legacy partition dirs, EXCLUDING version dirs and pointer
@@ -233,6 +231,12 @@ object Folio {
     else Some(spark.read.option("basePath", path)
       .parquet(entries.map(_.getAbsolutePath).toSeq: _*))
   }
+
+  /** The data a read-modify-write publish starts from: the live version
+    * `cur`, else the pre-versioned root content. */
+  private def liveData(spark: SparkSession, path: String,
+                       cur: Option[String]): Option[DataFrame] =
+    cur.map(readVersion(spark, path, _)).orElse(legacyRead(spark, path))
 
   /** Publish `df` as the next folio version: write the data to a fresh
     * staging dir, then ATOMICALLY rename it to `vN` and swap the
@@ -459,11 +463,7 @@ object Folio {
     val spark = df.sparkSession
     requireNotRollupManaged(path, "appendWithPromotion")
     val cur = currentVersion(path)
-    val existing: Option[DataFrame] = cur match {
-      case Some(v) => Some(spark.read.parquet(s"$path/$v"))
-      case None => legacyRead(spark, path)
-    }
-    existing match {
+    liveData(spark, path, cur) match {
       case None => publishVersion(df, path, 1L)
       case Some(old) =>
         val stored = old.schema.map(_.name).toSet
@@ -531,8 +531,7 @@ object Folio {
       "sortCols and zorderCols are alternative clusterings — pick one")
     requireNotRollupManaged(path, "compact")
     val cur = currentVersion(path)
-    val df = cur.map(v => spark.read.parquet(s"$path/$v"))
-      .orElse(legacyRead(spark, path))
+    val df = liveData(spark, path, cur)
       .getOrElse(throw new IllegalArgumentException(s"compact: no data at $path"))
     val keyCols = partitionCols.map(col)
     // z-value is STAGED as a column (withZValue) — the single-Column
@@ -586,10 +585,7 @@ object Folio {
     val spark = df.sparkSession
     requireNotRollupManaged(path, "upsertPublish")
     val cur = currentVersion(path)
-    val existing: Option[DataFrame] = cur match {
-      case Some(v) => Some(spark.read.parquet(s"$path/$v"))
-      case None => legacyRead(spark, path)
-    }
+    val existing = liveData(spark, path, cur)
     // preserve the live version's dir layout: an upsert is a row merge,
     // not a layout change — publishing flat over a partitioned version
     // would silently drop the clustering compact built (and the next
@@ -676,7 +672,7 @@ object Folio {
   def readVersion(spark: SparkSession, path: String, version: String): DataFrame = {
     require(new java.io.File(path, version).isDirectory,
       s"version $version not on disk at $path (have: ${versions(path).mkString(", ")})")
-    spark.read.parquet(s"$path/$version")
+    read(spark, s"$path/$version")
   }
 
   /** Morton / Z-ORDER clustering value over `cols` — the multi-dimension
@@ -1126,7 +1122,7 @@ object Folio {
     val prev = base match {
       case None => None
       case Some(v) =>
-        val r = spark.read.parquet(s"${rollupMetaDir(path)}/$v/rollup")
+        val r = rollupVersion(spark, path, v)
         val expect = (Seq("n_rows") ++ valCols.flatMap(c =>
           Seq(s"${c}_cnt", s"${c}_sum", s"${c}_min", s"${c}_max")) ++ keys).toSet
         require(r.columns.toSet == expect,
@@ -1140,7 +1136,7 @@ object Folio {
     // keys/valCols check above only covers the TRACKED columns
     val manifested = rollupManifest(path)
     if (manifested.nonEmpty) {
-      val stored = spark.read.parquet(manifested.head).schema
+      val stored = Parquet.schemaOf(spark, manifested.head)
       require(batch.schema.fieldNames.sorted.sameElements(stored.fieldNames.sorted),
         s"appendWithRollup: batch columns (${batch.columns.sorted.mkString(", ")}) " +
         s"drift from the folio's (${stored.fieldNames.sorted.mkString(", ")}) — " +
@@ -1156,7 +1152,7 @@ object Folio {
     // reaches readers through the atomically-published manifest
     val bdir = s"$path/batches/b_${System.nanoTime()}"
     batch.write.mode(SaveMode.ErrorIfExists).parquet(bdir)
-    val partial = rollupOf(spark.read.parquet(bdir), keys, valCols)
+    val partial = rollupOf(read(spark, bdir), keys, valCols)
     val merged = prev match {
       case None => partial
       case Some(r) => mergeRollups(r, partial, keys, valCols)
@@ -1224,8 +1220,11 @@ object Folio {
   def rollupRead(spark: SparkSession, path: String): DataFrame = {
     val v = currentVersion(rollupMetaDir(path)).getOrElse(
       throw new IllegalArgumentException(s"no rollup published at $path"))
-    spark.read.parquet(s"${rollupMetaDir(path)}/$v/rollup")
+    rollupVersion(spark, path, v)
   }
+
+  private def rollupVersion(spark: SparkSession, path: String, v: String): DataFrame =
+    read(spark, s"${rollupMetaDir(path)}/$v/rollup")
 
   /** The raw rows — exactly the manifested batches (an orphan dir from
     * a crashed append is invisible here, by construction). */

@@ -585,14 +585,15 @@ object RemoteTableServer {
     }
 
   /** Start a server for `tables` (name → parquet file or directory).
-    * Spark is used once per table, HERE, to derive the Spark schema —
-    * scans are Spark-free by design (see class doc). */
+    * The Spark schema is derived once per table, HERE, from a parquet
+    * footer (no Spark job) — scans are Spark-free by design (see class
+    * doc). */
   def start(spark: SparkSession, tables: Map[String, String],
             enableEval: Boolean = false,
             evalToken: String = ""): RemoteTableServer = {
     val served = tables.map { case (name, path) =>
       require(new java.io.File(path).exists(), s"remote table '$name': no such path $path")
-      val schema = spark.read.parquet(path).schema
+      val schema = graft.io.Parquet.schemaOf(spark, path)
       validate(name, schema)
       name -> Served(path, schema)
     }

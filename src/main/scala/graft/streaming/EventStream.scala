@@ -19,7 +19,7 @@ object EventStream {
   def readEvents(spark: SparkSession, dir: String): DataFrame = {
     // on-disk schema: `ts` has shipped both as a ns-long (nanosAsLong)
     // and as timestamp[µs] — normalizeEvents adapts either to (ts, ts_ns)
-    val onDisk = spark.read.parquet(s"$dir/events.parquet").schema
+    val onDisk = graft.io.Parquet.schemaOf(spark, s"$dir/events.parquet")
     // file stream source wants a directory: stream the sf dir, glob to
     // the events file (in production: the events/ partition root or Kafka)
     graft.Tables.normalizeEvents(
