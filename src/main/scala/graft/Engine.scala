@@ -25,8 +25,24 @@ import org.apache.spark.sql.SparkSession
   *    90 (a traced warm round: 1.7 compiles, 41 ms, per request). At 1000
   *    a warm pass compiles none. The `corpus` mix sits at the
   *    same edge: one traced warm round recompiled 14 for q72 at 100, none
-  *    at 1000. A streaming query still compiles about 17 classes on every
-  *    start, at any size.
+  *    at 1000.
+  *  - `spark.sql.artifact.isolation.enabled` = false, so that cache is
+  *    shared by every session. Spark keys a generated class by (class
+  *    loader, code), and with isolation on each session gets its own
+  *    executor class loader: every `newSession()`, and the clone each
+  *    `StreamingQuery` runs its batches in. Each stream start then
+  *    recompiled the same 17 classes of `EventStream.rollupStream`, and
+  *    the seven `interactive` queries recompiled 56 in a `newSession()`
+  *    (sf0.001; `StreamCodegenReuseSpec` pins both at 0).
+  *    Isolation only scopes session-added jars and files, and the engine
+  *    adds none.
+  *  - `fs.file.impl` and `fs.AbstractFileSystem.file.impl` (the
+  *    `spark.hadoop.` settings of `io.LocalFs`): Hadoop's local filesystem
+  *    without `libhadoop` forks `chmod` on every `mkdirs` and `create` and
+  *    `readlink` on every `FileContext` rename — about 105 child processes
+  *    per ingest round of folio writes and stream checkpoints. `io.LocalFs`
+  *    makes the same calls through NIO; files, checksums and renames are
+  *    Hadoop's own.
   */
 object Engine {
   def session(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]",
@@ -75,6 +91,8 @@ object Engine {
       }
       .config("spark.sql.shuffle.partitions", sp.toString)
       .config("spark.sql.codegen.cache.maxEntries", "1000")
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      .config(graft.io.LocalFs.settings)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       // AQE SMJ→shuffled-hash conversion (guide §3.1): when every

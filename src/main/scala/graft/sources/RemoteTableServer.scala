@@ -62,7 +62,7 @@ import org.apache.spark.sql.types._
   * fixed-layout folio members.
   */
 final class RemoteTableServer private (tables: Map[String, RemoteTableServer.Served],
-    evalSession: Option[SparkSession], evalToken: Option[String]) {
+    private[graft] val evalSession: Option[SparkSession], evalToken: Option[String]) {
   import RemoteTableServer._
 
   private val server = new ServerSocket(0, 64, InetAddress.getLoopbackAddress)

@@ -6,11 +6,7 @@ import org.apache.spark.metrics.source.CodegenMetrics
   * interactive session: a second pass over the same queries compiles
   * nothing (see `Engine.session`). */
 class CodegenCacheSpec extends SparkSpec {
-
-  /** The benchmark's `interactive` mix: operator families, native as-of,
-    * and Kerf dialect text. */
-  private val interactive = Seq("q02_filter_project", "q04_join_agg", "q11_window_rank",
-    "q45_asof_native", "q52_kerf_text", "q100_kerf_bars", "q162_kerf_fby")
+  import CodegenCacheSpec.interactive
 
   test("a second pass over the interactive queries compiles no class") {
     def pass(): Unit = interactive.foreach(q => SparkEntry.queries(q)(spark, sf).collect())
@@ -20,4 +16,11 @@ class CodegenCacheSpec extends SparkSpec {
     val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
     assert(compiled == 0, s"$compiled classes recompiled on the warm pass")
   }
+}
+
+object CodegenCacheSpec {
+  /** The benchmark's `interactive` mix: operator families, native as-of,
+    * and Kerf dialect text. */
+  val interactive = Seq("q02_filter_project", "q04_join_agg", "q11_window_rank",
+    "q45_asof_native", "q52_kerf_text", "q100_kerf_bars", "q162_kerf_fby")
 }

@@ -54,6 +54,15 @@ class RemoteFolioSpec extends SparkSpec {
     assert(got == want && got > 0)
   }
 
+  test("rexec: the eval site's child session keeps the engine's class sharing and filesystem") {
+    val es = evalServer.evalSession.get
+    assert(es ne spark)
+    assert(es.conf.get("spark.sql.artifact.isolation.enabled") == "false")
+    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
+      new java.net.URI("file:///"), es.sessionState.newHadoopConf()).getDefaultFileSystem
+    assert(fc.isInstanceOf[graft.io.LocalFs.Context], fc.getClass)
+  }
+
   test("rexec: remote errors surface with the site named") {
     val e = intercept[RuntimeException] {
       graft.sql.KerfSql.run(spark,
