@@ -119,11 +119,24 @@ class CodegenCoverageSpec extends SparkSpec {
     // ATLAS queries parse JSON; JsonToStructs is CodegenFallback in
     // Spark and the parse IS the operator
     "q141_nested_atlas" -> Set("JsonToStructs"),
-    "q200_atlas_infer" -> Set("JsonToStructs")
+    "q200_atlas_infer" -> Set("JsonToStructs"),
+    // q120 adjudicates Spark's OWN sketch aggregates against the oracle
+    // (COVERAGE.md "sketches"): the sketches ARE the operator, and a
+    // native rewrite would test something else. ApproximatePercentile,
+    // HllSketchAgg and HllUnionAgg are TypedImperativeAggregates — the
+    // engine SURVEY.md names for sketch-style HLL/quantile aggregates;
+    // HyperLogLogPlusPlus is Spark's fixed-buffer ImperativeAggregate;
+    // HllSketchEstimate reads the one row of the global union
+    // aggregate (rim-bound: see rimBound)
+    "q120_sketch_agg" -> Set("HyperLogLogPlusPlus", "ApproximatePercentile",
+      "HllUnionAgg", "HllSketchEstimate", "HllSketchAgg")
   )
 
-  /** The array HOFs whose global allowance is position-conditional. */
-  private val rimHofs = Set("ArrayTransform", "ZipWith", "ArraySort", "ArrayAggregate")
+  /** Allowed fallback classes whose allowance is position-conditional:
+    * the array HOFs, plus one scalar sketch read (HllSketchEstimate) —
+    * each is allowed only at an aggregation rim, never per scanned row. */
+  private val rimBound =
+    Set("ArrayTransform", "ZipWith", "ArraySort", "ArrayAggregate", "HllSketchEstimate")
 
   // ---------------------------------------------------------------
   // flagship enrollment — derived from the committed bench artifact
@@ -169,6 +182,15 @@ class CodegenCoverageSpec extends SparkSpec {
     (enrolled ++ historicalOffenders).distinct.sorted
   }
 
+  /** Why `name` is a flagship, for failure messages: a new bench record
+    * can enroll a query with no code change, and the message must say
+    * so rather than read as a regression. */
+  private def enrollment(name: String): String =
+    steadyMinMs.get(name).filter(_ >= enrollBarMs) match {
+      case Some(ms) => s"steady min $ms ms in BENCH_FAMILY.json"
+      case None => "historical offender"
+    }
+
   // ---------------------------------------------------------------
   // structural rim check
   // ---------------------------------------------------------------
@@ -184,12 +206,13 @@ class CodegenCoverageSpec extends SparkSpec {
       case _ => p.children.nonEmpty && p.children.forall(aggOnAllPaths)
     })
 
-  private def hofsIn(exprs: Seq[Expression]): Seq[String] =
+  private def rimBoundIn(exprs: Seq[Expression]): Seq[String] =
     exprs.flatMap(_.collect {
-      case e if rimHofs(e.getClass.getSimpleName) => e.getClass.getSimpleName
+      case e if rimBound(e.getClass.getSimpleName) => e.getClass.getSimpleName
     })
 
-  /** Array HOFs positioned per-ROW rather than at an aggregation rim.
+  /** Rim-bound classes (the array HOFs, the sketch read) positioned
+    * per-ROW rather than at an aggregation rim.
     *
     * Node cases:
     *  - aggregate node: a HOF in the RESULT expressions runs once per
@@ -211,10 +234,10 @@ class CodegenCoverageSpec extends SparkSpec {
         val perRowSide = node.groupingExpressions ++
           node.aggregateExpressions.flatMap(_.aggregateFunction.children)
         if (node.children.forall(aggOnAllPaths)) Seq.empty
-        else hofsIn(perRowSide).distinct.map(h => s"${node.nodeName}(input side): $h")
+        else rimBoundIn(perRowSide).distinct.map(h => s"${node.nodeName}(input side): $h")
       case node =>
         if (isAgg(node) || node.children.forall(aggOnAllPaths)) Seq.empty
-        else hofsIn(node.expressions).distinct.map(h => s"${node.nodeName}: $h")
+        else rimBoundIn(node.expressions).distinct.map(h => s"${node.nodeName}: $h")
     }
     offendersOf(plan) ++ subqueryPlans(plan).flatMap(offendersOf)
   }
@@ -243,16 +266,33 @@ class CodegenCoverageSpec extends SparkSpec {
     val offenders = flagships.flatMap { name =>
       val df = Queries.all(name)(spark, sf)
       val extra = perQuery.getOrElse(name, Set.empty)
-      fallbacks(df)
+      val found = fallbacks(df)
         .filter(e => !allowed.contains(e.getClass.getSimpleName))
         .filter(e => !extra.contains(e.getClass.getSimpleName))
         .map(e => s"$name: ${e.getClass.getSimpleName} — ${e.sql.take(160)}")
-    }.distinct
+        .distinct
+      if (found.isEmpty) found else s"$name enrolled by ${enrollment(name)}:" +: found
+    }
     assert(offenders.isEmpty,
       s"""interpreted (CodegenFallback) expressions on flagship hot paths —
          |either replace with a native codegen Expression (the DotProduct /
          |Int8Codec pattern) or allowlist WITH a written justification:
          |${offenders.mkString("\n")}""".stripMargin)
+  }
+
+  test("every per-query allowance on an enrolled flagship is still in its plan") {
+    // an allowance that no longer matches anything (Spark gave the class
+    // a codegen path, or the query dropped it) must be removed, or it
+    // silently waves through a later regression of the same class
+    val enrolled = perQuery.keySet.intersect(flagships.toSet).toSeq.sorted
+    val stale = enrolled.flatMap { name =>
+      val present = fallbacks(Queries.all(name)(spark, sf)).map(_.getClass.getSimpleName).toSet
+      (perQuery(name) -- present).toSeq.sorted.map(c => s"$name: $c")
+    }
+    assert(stale.isEmpty,
+      s"""per-query allowances with no matching fallback in the flagship's
+         |plan — shrink the perQuery entry:
+         |${stale.mkString("\n")}""".stripMargin)
   }
 
   test("every allowed array HOF on every flagship sits at an aggregation rim") {
