@@ -3,7 +3,8 @@ package graft.plans
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Expression, GenericInternalRow, JoinedRow, RowOrdering, SortOrder, UnsafeProjection}
-import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan, Statistics}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 
@@ -43,6 +44,15 @@ case class AsOfJoinPlan(
     forward: Boolean = false) extends BinaryNode {
   override def output: Seq[Attribute] =
     left.output ++ right.output.map(_.withNullability(true))
+  /** One row per left row: the left side's row count, and its size scaled
+    * by output width over left width, as `Project` scales. Spark's default
+    * for a binary node is the product of both sides' sizes. */
+  override def stats: Statistics = {
+    val l = left.stats
+    val size = l.sizeInBytes * EstimationUtils.getSizePerRow(output) /
+      EstimationUtils.getSizePerRow(left.output)
+    Statistics(sizeInBytes = size.max(1), rowCount = l.rowCount)
+  }
   override protected def withNewChildrenInternal(l: LogicalPlan, r: LogicalPlan): LogicalPlan =
     copy(left = l, right = r)
 }
