@@ -43,19 +43,10 @@ import org.apache.spark.sql.SparkSession
   *    per ingest round of folio writes and stream checkpoints. `io.LocalFs`
   *    makes the same calls through NIO; files, checksums and renames are
   *    Hadoop's own.
-  *  - `plans.SingleTaskSortRule`, an AQE runtime rule: a global sort over
-  *    measured stage output of at most
-  *    `spark.sql.adaptive.advisoryPartitionSizeInBytes` sorts in one task
-  *    instead of behind a range exchange, whose sampling job and map job
-  *    each re-ran the pipeline under the sort. Nearly every query ends in
-  *    an `orderBy`, so this is most of a short query's jobs (`interactive`,
-  *    sf0.1: 4.14 jobs per request before, 2.71 after). Both of its
-  *    thresholds are AQE's own: the advisory size is what AQE aims one
-  *    post-shuffle partition at, and under
-  *    `coalescePartitions.minPartitionSize` of input AQE would run the
-  *    pipeline in one task anyway, so the sort joins that task with no
-  *    shuffle at all. The engine sets no size of its own; larger sorts
-  *    keep the range exchange.
+  *  - `plans.SingleTaskSortRule`, an AQE runtime rule: a small measured
+  *    global sort runs in one task, because a range exchange costs a
+  *    sampling job and a map job; its size limit is AQE's own advisory
+  *    partition size, so the engine sets none.
   */
 object Engine {
   def session(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]",

@@ -12,17 +12,10 @@ import org.apache.spark.sql.internal.SQLConf
   * sampling job and the range-shuffle map job, and each re-runs the
   * pipeline between the last shuffle and the sort. For a small input AQE
   * then coalesces the range partitions to one task anyway. This rule puts
-  * a `Repartition(1)` under the sort. Its physical operator reports
-  * `SinglePartition`, which satisfies the sort's `OrderedDistribution`,
-  * so no range exchange is planned, and AQE adopts the plan for having
-  * no more shuffles than before.
-  *  - Without a shuffle (`CoalesceExec(1)`: no sampling job, no map job)
-  *    when the measured input under the sort is at most
-  *    `spark.sql.adaptive.coalescePartitions.minPartitionSize`: AQE reads
-  *    that input in one partition anyway, so one task loses nothing.
-  *  - With a single-partition shuffle (no sampling job) above that: the
-  *    pipeline under the sort still runs once, in parallel. Coalescing it
-  *    into one task made q11 at sf1 slower than the range exchange.
+  * a `Repartition(1, shuffle = false)` under the sort. Its physical
+  * operator, `CoalesceExec(1)`, reports `SinglePartition`, which satisfies
+  * the sort's `OrderedDistribution`, so no exchange is planned, and AQE
+  * adopts the plan for having fewer shuffles.
   *
   * It fires only when
   *  - every leaf under the sort is a materialized `LogicalQueryStage` (or
@@ -41,9 +34,7 @@ object SingleTaskSortRule extends Rule[LogicalPlan] {
     case Sort(_, true, Repartition(1, _, _), _) => plan
     case s @ Sort(_, true, child, _) if measured(child) &&
         child.stats.sizeInBytes <= conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES) =>
-      val input = child.collectLeaves().map(_.stats.sizeInBytes).sum
-      val shuffle = input > conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
-      s.copy(child = Repartition(1, shuffle, child))
+      s.copy(child = Repartition(1, shuffle = false, child))
     case _ => plan.mapChildren(apply)
   }
 

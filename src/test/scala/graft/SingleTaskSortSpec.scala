@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{Range, Repartition, Sort}
-import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.{SparkPlan, TakeOrderedAndProjectExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
@@ -60,7 +60,8 @@ class SingleTaskSortSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   pinned.foreach { case (q, want, dir) =>
     test(s"$q sorts in one task: $want jobs, no range exchange, the old plan's answer") {
-      val (rows, plan, jobs) = run(spark, q, dir)
+      // a plain spark.newSession(): the rule holds in every session
+      val (rows, plan, jobs) = run(session(), q, dir)
       assert(jobs == want, s"$q started $jobs jobs\n$plan")
       assert(rangeExchanges(plan).isEmpty, plan)
       assert(rows.nonEmpty)
@@ -71,22 +72,6 @@ class SingleTaskSortSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       assert(oldJobs == want + 2, s"$q started $oldJobs jobs under the old plan\n$oldPlan")
       assert(rows == oldRows)
     }
-  }
-
-  test("above AQE's minimum partition size the pipeline stays parallel: one single-partition shuffle") {
-    val s = session("spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1")
-    val (rows, plan, jobs) = run(s, "q52_kerf_text")
-    assert(jobs == 3 && rangeExchanges(plan).isEmpty, plan)
-    assert(collect(plan) {
-      case e: ShuffleExchangeLike if e.outputPartitioning == SinglePartition => e
-    }.size == 1, plan)
-    assert(rows == run(spark, "q52_kerf_text")._1)
-  }
-
-  test("the rule also applies in spark.newSession()") {
-    val (rows, plan, jobs) = run(session(), "q52_kerf_text")
-    assert(jobs == 2 && rangeExchanges(plan).isEmpty, plan)
-    assert(rows == run(spark, "q52_kerf_text")._1)
   }
 
   test("a top-K, a sort over a scan and a streaming plan keep their plans; local rows do not") {
