@@ -88,16 +88,16 @@ object Repl {
   }
 
   /** Dialect surface worth completing at a prompt — statement heads,
-    * clause keywords, and the join/storage verbs a console user types
-    * mid-query. Verbs that only appear inside expressions resolve
-    * through the catalog/vars instead. */
-  private val Keywords = Seq(
+    * clause keywords, and every pipeline verb (from the dialect's verb
+    * table). Verbs that only appear inside expressions resolve through
+    * the catalog/vars instead. */
+  private val Keywords = (Seq(
     "select", "update", "insert", "upsert", "delete", "distinct",
     "from", "where", "group", "order", "limit", "rollup", "cube", "sets",
     "asof", "join", "window", "on", "at", "within", "forward", "strict",
     "back", "against", "into", "by", "def", "if", "else", "while",
-    "neardup", "semdedup", "vacuum", "compact", "meta", "explain",
-    "fromjson", "tojson", "til", "ema", "kerf")
+    "meta", "explain", "fromjson", "tojson", "til", "ema", "kerf") ++
+    sql.KerfSql.verbNames).distinct
 
   /** Completion candidates for `prefix`: catalog tables (temp views and
     * catalog tables alike), the session's variables and `def`s, and the

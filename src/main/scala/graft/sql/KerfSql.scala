@@ -1977,6 +1977,7 @@ object KerfSql {
     def execStmt(toks: List[String]): Unit = {
       if (toks.isEmpty) return
       val p = new P(toks)
+      val verb = verbOf(toks)
       toks.head.toLowerCase match {
         case "select" => p.pop(); last = Left(runSelect(spark, p, vars.toMap, funcs.toMap))
         case "explain" if toks.lengthCompare(2) >= 0 &&
@@ -1995,47 +1996,8 @@ object KerfSql {
         case "delete" => p.pop(); last = Left(runDelete(spark, p, vars.toMap, funcs.toMap))
         case h @ ("insert" | "upsert") =>
           p.pop(); last = Left(runMerge(spark, p, h == "upsert", vars.toMap, funcs.toMap))
-        // pipeline verbs are NOT reserved words (the reference reserves
-        // only control/SQL heads, lexer.h:100-105): `cap(99)` must stay a
-        // call to a user def named cap. The verb form is always
-        // `<verb> <table> by …`, so dispatch only when the next token is
-        // not a call/operator shape.
-        case "uj" if toks.lengthCompare(3) >= 0 && toks(2) == "," =>
-          p.pop(); last = Left(runUj(spark, p))
-        case "pivot" if pipelineVerbForm(toks) =>
-          p.pop(); last = Left(runPivot(spark, p))
-        case "unpivot" if pipelineVerbForm(toks) =>
-          p.pop(); last = Left(runUnpivot(spark, p))
-        case "ungroup" if ungroupForm(toks) =>
-          p.pop(); last = Left(runUngroup(spark, p))
-        case "dedup"   if pipelineVerbForm(toks) => p.pop(); last = Left(runDedup(spark, p, near = false))
-        case "neardup" if pipelineVerbForm(toks) => p.pop(); last = Left(runDedup(spark, p, near = true))
-        case "semdedup" if pipelineVerbForm(toks) => p.pop(); last = Left(runSemDedup(spark, p))
-        case "chunk"   if pipelineVerbForm(toks) => p.pop(); last = Left(runChunk(spark, p))
-        case "lmscore" if pipelineVerbForm(toks) => p.pop(); last = Left(runLmScore(spark, p))
-        case "bpe"     if pipelineVerbForm(toks) => p.pop(); last = Left(runBpe(spark, p))
-        case "bpetrain" if toks.lengthCompare(3) >= 0 && toks(2).equalsIgnoreCase("on") =>
-          p.pop(); last = Left(runBpeTrain(spark, p))
-        case "census"  if pipelineVerbForm(toks) => p.pop(); last = Left(runCensus(spark, p))
-        case "drift" if toks.lengthCompare(3) >= 0 && toks(2).equalsIgnoreCase("against") =>
-          p.pop(); last = Left(runDrift(spark, p))
-        case "classify" if pipelineVerbForm(toks) => p.pop(); last = Left(runClassify(spark, p))
-        case "classifytrain" if pipelineVerbForm(toks) =>
-          p.pop(); last = Left(runClassifyTrain(spark, p))
-        case "index"   if pipelineVerbForm(toks) => p.pop(); last = Left(runIndex(spark, p))
-        // `probe 'path' …` — path-first like compact
-        case "probe" if toks.lengthCompare(2) >= 0 && toks(1).startsWith("'") =>
-          p.pop(); last = Left(runProbe(spark, p))
-        case "sample"  if pipelineVerbForm(toks) => p.pop(); last = Left(runSample(spark, p))
-        case "shard"   if pipelineVerbForm(toks) => p.pop(); last = Left(runShard(spark, p))
-        case "cap"     if pipelineVerbForm(toks) => p.pop(); last = Left(runCap(spark, p))
-        case "top"     if pipelineVerbForm(toks) => p.pop(); last = Left(runTop(spark, p))
-        // `compact 'path' …` — a FILE verb like >>/<<: the quoted-path
-        // second token keeps `compact(x)` an expression over user names
-        case "compact" if toks.lengthCompare(2) >= 0 && toks(1).startsWith("'") =>
-          p.pop(); last = Left(runCompact(spark, p))
-        case "vacuum" if toks.lengthCompare(2) >= 0 && toks(1).startsWith("'") =>
-          p.pop(); last = Left(runVacuum(spark, p))
+        // pipeline verbs: one table, see `pipelineVerbs`
+        case _ if verb.isDefined => last = Left(verb.get.run(spark, toks))
         // `meta t` — exactly two tokens so `meta(x)` stays a user call
         case "meta" if toks.lengthCompare(2) == 0 &&
             toks(1).matches("[A-Za-z_][A-Za-z0-9_]*") =>
@@ -2045,8 +2007,6 @@ object KerfSql {
         case "rexec" if toks.lengthCompare(3) >= 0 &&
             (toks(1).startsWith("'") || toks(1) == "[") =>
           p.pop(); last = Left(runRexec(spark, p))
-        case "rollup" if toks.lengthCompare(2) >= 0 && toks(1).startsWith("'") =>
-          p.pop(); last = Left(runRollup(spark, p))
         // `set order kerf|ansi` / `set eq kerf|ansi` — SESSION-WIDE
         // semantic modes (grade.cc:15–26 FLOAT_NANS_COMPARE_AS_SMALLEST
         // ordering; test.cc:102–108 null==NaN + epsilon equality — the
@@ -2220,6 +2180,7 @@ object KerfSql {
         case name if toks.lengthCompare(1) > 0 && toks(1) == ":" &&
                      name.matches("[A-Za-z_][A-Za-z0-9_.]*") =>
           p.pop(); p.pop() // name :
+          val verb = verbOf(p.toks)
           if (p.peekIs("<<")) {
             // `x: << 'path'` — read back (slop.h:1037); promotion-aware,
             // so a folio published by appendWithPromotion resolves to
@@ -2301,36 +2262,10 @@ object KerfSql {
             require(p.done, s"trailing tokens in assignment: ${p.toks.mkString(" ")}")
             df.createOrReplaceTempView(name)
             last = Left(df)
-          } else if ((p.peekIs("compact") || p.peekIs("probe") ||
-                      p.peekIs("rollup")) &&
-                     p.toks.lengthCompare(2) >= 0 && p.toks(1).startsWith("'")) {
-            val verb = p.pop().toLowerCase
-            val df = verb match {
-              case "probe"  => runProbe(spark, p)
-              case "rollup" => runRollup(spark, p)
-              case _        => runCompact(spark, p)
-            }
-            df.createOrReplaceTempView(name)
-            last = Left(df)
-          } else if (p.peekIs("uj") && p.toks.lengthCompare(3) >= 0 &&
-                     p.toks(2) == ",") {
-            p.pop()
-            val df = runUj(spark, p)
-            df.createOrReplaceTempView(name)
-            last = Left(df)
-          } else if (p.peekIs("pivot") && pipelineVerbForm(p.toks)) {
-            p.pop()
-            val df = runPivot(spark, p)
-            df.createOrReplaceTempView(name)
-            last = Left(df)
-          } else if (p.peekIs("unpivot") && pipelineVerbForm(p.toks)) {
-            p.pop()
-            val df = runUnpivot(spark, p)
-            df.createOrReplaceTempView(name)
-            last = Left(df)
-          } else if (p.peekIs("ungroup") && ungroupForm(p.toks)) {
-            p.pop()
-            val df = runUngroup(spark, p)
+          } else if (verb.isDefined) {
+            // table-valued pipeline verbs assign like a select: the
+            // result registers as a temp view for later `from` clauses
+            val df = verb.get.run(spark, p.toks)
             df.createOrReplaceTempView(name)
             last = Left(df)
           } else if (p.peekIs("meta") && p.toks.lengthCompare(2) == 0 &&
@@ -2343,43 +2278,6 @@ object KerfSql {
                      (p.toks(1).startsWith("'") || p.toks(1) == "[")) {
             p.pop()
             val df = runRexec(spark, p)
-            df.createOrReplaceTempView(name)
-            last = Left(df)
-          } else if ((p.peekIs("dedup") || p.peekIs("neardup") ||
-                      p.peekIs("semdedup") || p.peekIs("chunk") ||
-                      p.peekIs("index") || p.peekIs("lmscore") ||
-                      p.peekIs("census") || p.peekIs("classify") ||
-                      p.peekIs("sample") || p.peekIs("shard") || p.peekIs("cap") ||
-                      p.peekIs("bpe") || p.peekIs("classifytrain") ||
-                      p.peekIs("top")) &&
-                     pipelineVerbForm(p.toks) ||
-                     // drift's shape is `drift a against b`, not `… by …`
-                     (p.peekIs("drift") && p.toks.lengthCompare(3) >= 0 &&
-                      p.toks(2).equalsIgnoreCase("against")) ||
-                     // bpetrain's shape is `bpetrain t on text at N`
-                     (p.peekIs("bpetrain") && p.toks.lengthCompare(3) >= 0 &&
-                      p.toks(2).equalsIgnoreCase("on"))) {
-            // table-valued pipeline verbs assign like a select: the
-            // result registers as a temp view for later `from` clauses
-            val verb = p.pop().toLowerCase
-            val df = verb match {
-              case "dedup"    => runDedup(spark, p, near = false)
-              case "neardup"  => runDedup(spark, p, near = true)
-              case "semdedup" => runSemDedup(spark, p)
-              case "chunk"    => runChunk(spark, p)
-              case "lmscore"  => runLmScore(spark, p)
-              case "census"   => runCensus(spark, p)
-              case "drift"    => runDrift(spark, p)
-              case "classify" => runClassify(spark, p)
-              case "index"    => runIndex(spark, p)
-              case "sample"   => runSample(spark, p)
-              case "shard"    => runShard(spark, p)
-              case "cap"      => runCap(spark, p)
-              case "bpe"      => runBpe(spark, p)
-              case "bpetrain" => runBpeTrain(spark, p)
-              case "classifytrain" => runClassifyTrain(spark, p)
-              case "top"      => runTop(spark, p)
-            }
             df.createOrReplaceTempView(name)
             last = Left(df)
           } else {
@@ -3407,44 +3305,7 @@ object KerfSql {
       .toDF("col", "type", "nullable")
   }
 
-  /** The text dialect's last mile to the LLM dedup tier (SURVEY
-    * north-star ops; the underlying map stages are already
-    * SQL-registered as `graft_shingle_hashes`/`graft_minhash_signature`
-    * — this gives the whole OPERATOR a verb):
-    *
-    *   `dedup t by id on text [order c1, c2 …]`
-    *     → [[graft.llm.Dedup.exact]]: (text_key, keep_id, group_size)
-    *       per distinct normalized text, min-id witness;
-    *   `neardup t by id on text [within τ] [keep best score] [order …]`
-    *     → [[graft.llm.Dedup.minhashPairs]]: MinHash+LSH candidate
-    *       pairs verified at Jaccard ≥ τ (default 0.7, the reference
-    *       near-dup posture; `within` mirrors the as-of tolerance verb).
-    *       With `keep best <col>` the pair graph feeds
-    *       [[graft.llm.Dedup.keepBestPerCluster]] instead: the verb
-    *       returns the surviving docs (max-score witness per cluster,
-    *       ties → min id) rather than the raw pair list.
-    *
-    * Same Catalyst trees as the Column API — the dialect adds parsing,
-    * not a second engine. */
-  /** Quoted-path operand shared by every persisted-store verb
-    * (`index … at`, `neardup … into/against`, `semdedup … against`). */
-  /** Non-negative integer operand of a pipeline verb — ONE contract for
-    * every verb's `size/overlap/lists/top/…` numbers (the copies had
-    * begun to drift). */
-  /** Strictly-positive variant for count-like operands. */
-  private def parseStrictPosInt(p: P, ctx: String): Int = {
-    val n = parsePosInt(p, ctx)
-    require(n > 0, s"$ctx needs a positive int, got $n")
-    n
-  }
-
-  private def parsePosInt(p: P, ctx: String): Int = {
-    val t = p.pop()
-    require(t.nonEmpty && t.forall(_.isDigit),
-      s"$ctx needs a non-negative int, got $t")
-    t.toInt
-  }
-
+  /** Quoted-path operand of the `>>` file verb. */
   private def parseQuotedPath(p: P, verb: String): String = {
     val t = p.pop()
     require(t.startsWith("'") && t.endsWith("'") && t.length > 2,
@@ -3452,800 +3313,647 @@ object KerfSql {
     unq(t)
   }
 
-  /** Optional `within τ` threshold with a verb-specific default. */
-  private def parseWithin(p: P, default: Double): Double =
-    if (p.peekIs("within")) { p.pop(); p.pop().toDouble } else default
+  // ------------------------------------------------------- pipeline verbs
+  // One clause grammar for every table-valued verb (the reference's
+  // parser likewise scoops SQL groups at one fixed keyword set,
+  // parser.h:541–567): an entry of `pipelineVerbs` names the verb, its
+  // leading operand and its ordered clauses; `parseVerb` reads and
+  // checks a whole statement against the entry before the lowering
+  // touches a table or a path.
 
-  private def runDedup(spark: SparkSession, p: P, near: Boolean): DataFrame = {
-    val df = spark.table(p.pop())
-    p.expect("by"); val idCol = p.pop()
-    p.expect("on"); val textCol = p.pop()
-    // the PERSISTED-index faces (incremental dedup, q197's engine):
-    //   `neardup t by id on text against 'path' [within τ]` probes the
-    //     stored corpus — (id_a indexed, id_b new, jaccard) pairs;
-    //   `neardup t by id on text into 'path'` appends the batch to the
-    //     index (creating it) and returns a one-row (path, docs) receipt.
-    if (near && (p.peekIs("against") || p.peekIs("into"))) {
-      val mode = p.pop().toLowerCase
-      val path = parseQuotedPath(p, s"neardup … $mode")
-      if (mode == "into") {
-        require(p.done, s"trailing tokens in neardup into: ${p.toks.mkString(" ")}")
-        val bdir = graft.llm.Dedup.indexAppend(df, idCol, textCol, path)
-        import spark.implicits._
+  /** What a clause keyword takes; `what` is the expectation an error
+    * message names. */
+  private sealed abstract class Kind(val what: String)
+  private case object Flag extends Kind("no operand")
+  private case object Ident extends Kind("an identifier")
+  private case object Table extends Kind("a table name")
+  private case class Idents(min: Int = 1, max: Int = Int.MaxValue) extends Kind(
+    if (min == max) s"$min comma-separated names"
+    else if (min > 1) s"at least $min comma-separated names"
+    else "a comma-separated name list")
+  /** `n` juxtaposed integers, each in lo..hi (read as Long). */
+  private case class Bounded(lo: Long, hi: Long, n: Int = 1) extends Kind(
+    (if (n == 1) "an int" else s"$n ints") + s" in $lo..$hi")
+  private case object Num extends Kind("a number like 0.7")
+  private case object Path extends Kind("a quoted path")
+  private case object Hex extends Kind("a quoted lowercase hex ceiling like '29'")
+  private case object Lits extends Kind(
+    "a parenthesised list of quoted strings or numbers")
+  private case object ParenNames extends Kind("a parenthesised column list")
+  /** The rest of the statement, lowered by [[parseOrderCols]] against
+    * the verb's table. */
+  private case object OrderCols extends Kind("order columns")
+  private case class Call(fns: Seq[String]) extends Kind(
+    s"${fns.mkString("/")} of one column, like ${fns.head}(c)")
+
+  private val PosInt = Bounded(1, Int.MaxValue)
+  private val NatInt = Bounded(0, Int.MaxValue)
+  private val PosLong = Bounded(1, Long.MaxValue)
+
+  /** One clause: `kw` and its operand. A `required` clause must appear
+    * whenever the clause it `needs` (if any) does; an absent optional
+    * one reads as `default`. */
+  private case class Clause(kw: String, kind: Kind, required: Boolean = false,
+                            default: Any = null, needs: String = "")
+  private def req(kw: String, kind: Kind, needs: String = "") =
+    Clause(kw, kind, required = true, needs = needs)
+  private def opt(kw: String, kind: Kind, default: Any = null, needs: String = "") =
+    Clause(kw, kind, default = default, needs = needs)
+  private def table = Clause("table", Table)
+  private def path = Clause("path", Path)
+  private def byOn = Seq(req("by", Ident), req("on", Ident))
+
+  /** A verb: its leading operand, its clauses in statement order, the
+    * clause pairs that exclude each other (`a -> Seq(b, c)`: `a` with
+    * `b` or `c` is an error), and its lowering. */
+  private case class Verb(name: String, head: Clause, clauses: Seq[Clause] = Nil,
+                          excl: Seq[(String, Seq[String])] = Nil)(
+                          val lower: (SparkSession, Args) => DataFrame) {
+    /** Verb names are NOT reserved words (the reference reserves only
+      * control/number/SQL heads, lexer.h:100-105), so `cap(99)` or
+      * `sample + 1` must stay expressions over user names: a statement
+      * is this verb only when its head shape holds — a quoted path, or
+      * an identifier followed by the first clause's keyword (`,` for a
+      * table list; end of statement too when that clause is optional). */
+    def matches(toks: List[String]): Boolean = toks.lift(1).exists { t1 =>
+      val t2 = toks.lift(2)
+      head.kind match {
+        case Path => t1.startsWith("'")
+        case Idents(_, _) => isIdent(t1) && t2.contains(",")
+        case _ => isIdent(t1) && (clauses.headOption match {
+          case Some(c) if c.required => t2.exists(_.equalsIgnoreCase(c.kw))
+          case Some(c) => t2.forall(_.equalsIgnoreCase(c.kw))
+          case None => t2.isEmpty
+        })
+      }
+    }
+    def run(spark: SparkSession, toks: List[String]): DataFrame =
+      lower(spark, parseVerb(this, toks))
+  }
+
+  /** A parsed statement's operands by clause keyword (the leading one
+    * under its role name: `table`, `path` or `tables`); absent optional
+    * clauses read as their defaults. */
+  private final class Args(verb: Verb, vals: Map[String, Any]) {
+    def has(kw: String): Boolean = vals.contains(kw)
+    def apply[A](kw: String): A =
+      vals.getOrElse(kw, verb.clauses.find(_.kw == kw).map(_.default).orNull)
+        .asInstanceOf[A]
+    def get[A](kw: String): Option[A] = vals.get(kw).map(_.asInstanceOf[A])
+    def str(kw: String): String = apply[String](kw)
+    def int(kw: String): Int = apply[Number](kw).intValue
+    def long(kw: String): Long = apply[Number](kw).longValue
+    def num(kw: String): Double = apply[Number](kw).doubleValue
+    def names(kw: String): Seq[String] = get[Seq[String]](kw).getOrElse(Nil)
+  }
+
+  private def isIdent(t: String): Boolean = t.matches("[A-Za-z_][A-Za-z0-9_.]*")
+
+  /** Read one operand of kind `c.kind`; a miss names the verb, the
+    * clause and the expected operand. */
+  private def operand(v: Verb, c: Clause, p: P): Any = {
+    def bad(): Nothing = throw new IllegalArgumentException(
+      s"${v.name}: `${c.kw}` expects ${c.kind.what}, got " +
+      p.peek.fold("end of statement")(t => s"'$t'"))
+    def take(ok: String => Boolean): String = if (p.peek.exists(ok)) p.pop() else bad()
+    def quoted(t: String) = t.length >= 2 && t.startsWith("'") && t.endsWith("'")
+    def list[A](max: Int)(item: => A): Seq[A] = {
+      val out = scala.collection.mutable.ArrayBuffer[A](item)
+      while (out.length < max && p.peekIs(",")) { p.pop(); out += item }
+      out.toSeq
+    }
+    def paren[A](item: => A): Seq[A] = {
+      take(_ == "("); val xs = list(Int.MaxValue)(item); take(_ == ")"); xs
+    }
+    c.kind match {
+      case Flag => ()
+      case Ident | Table => take(isIdent)
+      case Idents(min, max) =>
+        val xs = list(max)(take(isIdent))
+        if (xs.length < min) bad()
+        xs
+      case Bounded(lo, hi, n) =>
+        val xs = Seq.fill(n)(take(t => t.forall(_.isDigit) &&
+          t.toLongOption.exists(x => x >= lo && x <= hi)).toLong)
+        if (n == 1) xs.head else xs
+      case Num => take(t => t.forall(ch => ch.isDigit || ch == '.') &&
+        t.toDoubleOption.isDefined).toDouble
+      case Path => unq(take(t => quoted(t) && t.length > 2))
+      case Hex => unq(take(t => quoted(t) && t.length > 2 &&
+        unq(t).forall(ch => ch.isDigit || ('a' <= ch && ch <= 'f'))))
+      case Lits => paren {
+        val t = take(t => quoted(t) || t.matches("""\d+(\.\d+)?"""))
+        // typed Any so a whole number stays a Long, not widened to Double
+        val v: Any = if (quoted(t)) unq(t) else if (t.contains('.')) t.toDouble else t.toLong
+        v
+      }
+      case ParenNames => paren(take(isIdent))
+      case OrderCols =>
+        if (p.done) bad()
+        val rest = p.toks; p.toks = Nil; rest
+      case Call(fns) =>
+        val fn = take(t => fns.contains(t.toLowerCase)).toLowerCase
+        take(_ == "("); val arg = take(isIdent); take(_ == ")")
+        (fn, arg)
+    }
+  }
+
+  /** Parse and check a whole statement (verb first) against its entry:
+    * clauses in entry order, each at most once; a required one that is
+    * skipped, a clause whose `needs` is absent, an excluded pair, or a
+    * token no remaining clause starts is an IllegalArgumentException
+    * naming the verb and the clause. */
+  private def parseVerb(v: Verb, toks: List[String]): Args = {
+    def fail(msg: String): Nothing =
+      throw new IllegalArgumentException(s"${v.name}: $msg")
+    val p = new P(toks.tail)
+    val vals = scala.collection.mutable.Map[String, Any](v.head.kw -> operand(v, v.head, p))
+    def missing(from: Int, until: Int): Unit =
+      v.clauses.slice(from, until)
+        .find(c => c.required && (c.needs.isEmpty || vals.contains(c.needs)))
+        .foreach(c => fail(s"missing `${c.kw}` clause (${c.kw} takes ${c.kind.what})"))
+    var next = 0
+    while (!p.done) {
+      val j = v.clauses.indexWhere(c => p.peekIs(c.kw), next)
+      if (j < 0) throw new IllegalArgumentException(
+        s"trailing tokens in ${v.name}: ${p.toks.mkString(" ")}")
+      val c = v.clauses(j)
+      if (c.needs.nonEmpty && !vals.contains(c.needs))
+        fail(s"`${c.kw}` applies only after `${c.needs}`")
+      missing(next, j)
+      p.pop()
+      vals(c.kw) = operand(v, c, p)
+      next = j + 1
+    }
+    missing(next, v.clauses.length)
+    for ((a, bs) <- v.excl; b <- bs if vals.contains(a) && vals.contains(b))
+      fail(s"`$a` and `$b` are alternatives — pick one")
+    new Args(v, vals.toMap)
+  }
+
+  /** `order c1, c2 …` over a verb's result, when given. */
+  private def ordered(df: DataFrame, a: Args): DataFrame =
+    if (a.has("order")) df.orderBy(a.names("order").map(col): _*) else df
+
+  /** The table-valued verbs. Every entry assigns like a select
+    * (`r: <verb> …` registers the result as a view). */
+  private val pipelineVerbs: Seq[Verb] = Seq(
+    /** `dedup t by id on text [order …]` → [[graft.llm.Dedup.exact]]:
+      * (text_key, keep_id, group_size) per distinct normalized text,
+      * min-id witness. Same Catalyst trees as the Column API — the
+      * dialect adds parsing, not a second engine. */
+    Verb("dedup", table, byOn :+ opt("order", Idents())) { (s, a) =>
+      ordered(graft.llm.Dedup.exact(s.table(a.str("table")), a.str("by"), a.str("on")), a)
+    },
+    /** `neardup t by id on text [within τ] [keep best score] [order …]`
+      * → [[graft.llm.Dedup.minhashPairs]]: MinHash+LSH candidate pairs
+      * verified at Jaccard ≥ τ (`within` mirrors the as-of tolerance
+      * verb). The metric alternatives: `edit N [prefix P]` = blocked
+      * Levenshtein ([[graft.llm.Dedup.fuzzyPairs]], the typo-tolerant
+      * short-string form, q148); `frames` = video perceptual near-dup
+      * over a multi-frame binary column (q149); `envelope` = its audio
+      * sibling, volume-invariant window-envelope hashes over PCM (q159)
+      * — the media metrics' set-Jaccard default is 0.9. `keep best
+      * <col>` feeds the pair graph to
+      * [[graft.llm.Dedup.keepBestPerCluster]]: the surviving docs
+      * (max-score witness per cluster, ties → min id). The PERSISTED
+      * faces (incremental dedup, q197's engine): `into 'path'` appends
+      * the batch to the LSH index and returns a (path, docs) receipt;
+      * `against 'path' [within τ]` probes the stored corpus — (id_a
+      * indexed, id_b new, jaccard) pairs. */
+    Verb("neardup", table, byOn ++ Seq(opt("into", Path), opt("against", Path),
+        opt("frames", Flag), opt("envelope", Flag), opt("edit", PosInt),
+        opt("prefix", PosInt, 8, needs = "edit"), opt("within", Num, 0.7),
+        opt("keep", Flag), req("best", Ident, needs = "keep"), opt("order", Idents())),
+      excl = Seq(
+        "into" -> Seq("against", "frames", "envelope", "edit", "within", "keep", "order"),
+        "against" -> Seq("frames", "envelope", "edit", "keep", "order"),
+        "frames" -> Seq("envelope", "edit"), "envelope" -> Seq("edit"),
+        "edit" -> Seq("within"))) { (s, a) =>
+      val (df, id, text) = (s.table(a.str("table")), a.str("by"), a.str("on"))
+      if (a.has("into")) {
+        val bdir = graft.llm.Dedup.indexAppend(df, id, text, a.str("into"))
+        import s.implicits._
         // receipt count from the WRITTEN batch's parquet footers (a
         // metadata count), never a recompute of the source plan; an
         // empty batch manifests no dir and receipts 0
-        val n = if (bdir.isEmpty) 0L
-                else spark.read.parquet(s"$bdir/sets").count()
-        return Seq((path, n)).toDF("path", "docs")
+        val n = if (bdir.isEmpty) 0L else s.read.parquet(s"$bdir/sets").count()
+        Seq((a.str("into"), n)).toDF("path", "docs")
+      } else if (a.has("against"))
+        graft.llm.Dedup.indexProbe(df, id, text, a.str("against"), a.num("within"))
+      else {
+        val tau = if ((a.has("frames") || a.has("envelope")) && !a.has("within")) 0.9
+                  else a.num("within")
+        val pairs =
+          if (a.has("edit")) graft.llm.Dedup.fuzzyPairs(df, id, text,
+            maxDist = a.int("edit"), prefixLen = a.int("prefix"))
+          else if (a.has("frames")) graft.llm.Multimodal.videoPerceptualPairs(
+            df, id, text, jaccardThreshold = tau)
+          else if (a.has("envelope")) graft.llm.Multimodal.audioPerceptualPairs(
+            df, id, text, jaccardThreshold = tau)
+          else graft.llm.Dedup.minhashPairs(df, id, text, jaccardThreshold = tau)
+        ordered(if (a.has("keep")) graft.llm.Dedup.keepBestPerCluster(df, id, a.str("best"), pairs)
+                else pairs, a)
       }
-      val tau = parseWithin(p, 0.7)
-      require(p.done, s"trailing tokens in neardup against: ${p.toks.mkString(" ")}")
-      return graft.llm.Dedup.indexProbe(df, idCol, textCol, path, tau)
-    }
-    // `neardup … frames [within τ]` switches the metric to VIDEO
-    // perceptual near-dup (Multimodal.videoPerceptualPairs over a
-    // multi-frame binary column, q149); `within` is the set-Jaccard
-    // threshold there, same as the MinHash meaning
-    var frames = false
-    if (near && p.peekIs("frames")) { p.pop(); frames = true }
-    // `neardup … envelope [within τ]` is the AUDIO sibling
-    // (Multimodal.audioPerceptualPairs — volume-invariant window-
-    // envelope hashes over a PCM binary column, q159)
-    var envelope = false
-    if (near && p.peekIs("envelope")) {
-      require(!frames, "neardup: `frames` and `envelope` are alternative metrics — pick one")
-      p.pop(); envelope = true
-    }
-    // `neardup … edit N [prefix P]` switches the pair metric from
-    // MinHash-Jaccard to blocked Levenshtein (Dedup.fuzzyPairs) — the
-    // typo-tolerant short-string form (q148)
-    var edit: Option[Int] = None
-    var prefix = 8
-    if (near && p.peekIs("edit")) {
-      require(!frames && !envelope,
-        "neardup: `frames`/`envelope` and `edit` are alternative metrics — pick one")
-      p.pop()
-      val t = p.pop()
-      require(t.forall(_.isDigit) && t.toInt > 0,
-        s"neardup … edit needs a positive int, got $t")
-      edit = Some(t.toInt)
-      if (p.peekIs("prefix")) {
-        p.pop()
-        val t2 = p.pop()
-        require(t2.forall(_.isDigit) && t2.toInt > 0,
-          s"neardup … prefix needs a positive int, got $t2")
-        prefix = t2.toInt
+    },
+    /** `semdedup t by id on vec [within τ] [clusters k] [keep [best s]]
+      * [order …]` → [[graft.llm.Similarity.semDedupVictims]] (SemDeDup,
+      * Abbas et al. 2023): k-means the embedding space, exact cosine
+      * within clusters only, drop anything with a lower-id cluster-mate
+      * at cos ≥ τ (the paper's near-1 posture). Returns the victim list
+      * (dropped_id, witness_id, cos); with `keep` the SURVIVING rows
+      * under min-id pruning; with `keep best <score>` the quality-aware
+      * survivors ([[graft.llm.Similarity.semDedupKeepBest]], the same
+      * election as `neardup … keep best`). `against 'path' [within τ]`
+      * is the INCREMENTAL face (q198's engine): probe the persisted IVF
+      * index for the nearest STORED neighbor; ≥ τ (default 0.9 there)
+      * = semantic dup of it. */
+    Verb("semdedup", table, byOn ++ Seq(opt("against", Path), opt("within", Num, 0.95),
+        opt("clusters", PosInt, 16), opt("keep", Flag), opt("best", Ident, needs = "keep"),
+        opt("order", Idents())),
+      excl = Seq("against" -> Seq("clusters", "keep", "order"))) { (s, a) =>
+      val (df, id, vec) = (s.table(a.str("table")), a.str("by"), a.str("on"))
+      val (tau, k) = (a.num("within"), a.int("clusters"))
+      if (a.has("against"))
+        graft.llm.Similarity.semDedupProbe(s, a.str("against"), df,
+          a.get[Double]("within").getOrElse(0.9), idCol = id, vecCol = vec)
+      else ordered(
+        if (a.has("best")) graft.llm.Similarity.semDedupKeepBest(df, a.str("best"), tau,
+          nClusters = k, idCol = id, vecCol = vec)
+        else if (a.has("keep")) graft.llm.Similarity.semDedup(df, tau,
+          nClusters = k, idCol = id, vecCol = vec)
+        else graft.llm.Similarity.semDedupVictims(df, tau,
+          nClusters = k, idCol = id, vecCol = vec), a)
+    },
+    /** `chunk t by id on text size 64 [overlap 16]` →
+      * [[graft.llm.TextOps.chunk]]: fixed-size token windows advancing by
+      * size − overlap (the embedding-prep op; trailing chunk short, short
+      * docs one chunk). */
+    Verb("chunk", table, byOn ++ Seq(req("size", NatInt), opt("overlap", NatInt, 0))) {
+      (s, a) => graft.llm.TextOps.chunk(s.table(a.str("table")), a.str("by"), a.str("on"),
+        a.int("size"), a.int("overlap"))
+    },
+    /** `lmscore t by id on text [using model]` →
+      * [[graft.llm.TextOps.unigramStats]] (self-census) or
+      * [[graft.llm.TextOps.unigramScore]] against a census TABLE
+      * `(tok, cnt)` — the deployment split: train the model once, score
+      * any corpus (or stream) against it. */
+    Verb("lmscore", table, byOn :+ opt("using", Table)) { (s, a) =>
+      val df = s.table(a.str("table"))
+      a.get[String]("using").map(s.table(_)) match {
+        case Some(census) =>
+          require(census.columns.toSet == Set("tok", "cnt"),
+            s"lmscore … using needs a (tok, cnt) census table, got ${census.columns.mkString(", ")}")
+          graft.llm.TextOps.unigramScore(df, census, a.str("by"), a.str("on"))
+        case None => graft.llm.TextOps.unigramStats(df, a.str("by"), a.str("on"))
       }
-    }
-    var tau = if (frames || envelope) 0.9 else 0.7 // the set-Jaccard defaults
-    if (near && p.peekIs("within")) {
-      require(edit.isEmpty, "neardup: `edit` and `within` are alternative metrics — pick one")
-      p.pop(); tau = p.pop().toDouble
-    }
-    var keepBest: Option[String] = None
-    if (near && p.peekIs("keep")) { p.pop(); p.expect("best"); keepBest = Some(p.pop()) }
-    val base =
-      if (near) {
-        val pairs = (edit, frames, envelope) match {
-          case (Some(d), _, _) => graft.llm.Dedup.fuzzyPairs(df, idCol, textCol,
-            maxDist = d, prefixLen = prefix)
-          case (None, true, _) => graft.llm.Multimodal.videoPerceptualPairs(
-            df, idCol, textCol, jaccardThreshold = tau)
-          case (None, _, true) => graft.llm.Multimodal.audioPerceptualPairs(
-            df, idCol, textCol, jaccardThreshold = tau)
-          case _ => graft.llm.Dedup.minhashPairs(df, idCol, textCol,
-            jaccardThreshold = tau)
-        }
-        keepBest match {
-          case Some(sc) => graft.llm.Dedup.keepBestPerCluster(df, idCol, sc, pairs)
-          case None     => pairs
-        }
+    },
+    /** `bpe t by id on text using merges` → [[graft.llm.TextOps.bpeApply]]
+      * against a published `(rank, left, right)` merge table — the
+      * deployment split, like `lmscore … using census`. The merge table
+      * is a bounded model input (≤10000 rules, the classifier-weights
+      * discipline). */
+    Verb("bpe", table, byOn :+ req("using", Table)) { (s, a) =>
+      val mt = s.table(a.str("using"))
+      require(Seq("rank", "left", "right").forall(mt.columns.contains),
+        s"bpe … using needs a (rank, left, right) merge table, " +
+        s"got ${mt.columns.mkString(", ")}")
+      val rows = mt.select(col("rank").cast("long"), col("left"), col("right"))
+        .orderBy("rank").limit(10001).collect()
+      require(rows.nonEmpty && rows.length <= 10000,
+        s"bpe merge table must have 1..10000 rows, got ${rows.length}")
+      graft.llm.TextOps.bpeApply(s.table(a.str("table")), a.str("by"), a.str("on"),
+        rows.map(r => (r.getString(1), r.getString(2))).toSeq)
+    },
+    /** `bpetrain t on text at 20 [min 2]` → [[graft.llm.TextOps.bpeTrain]]:
+      * learn the merge table from the corpus (one corpus pass for the
+      * word census, then vocab-bounded rounds) — bpetrain on the
+      * reference corpus, `bpe … using` everywhere else. */
+    Verb("bpetrain", table, Seq(req("on", Ident), req("at", Bounded(1, 10000)),
+        opt("min", PosLong, 2L))) { (s, a) =>
+      graft.llm.TextOps.bpeTrain(s.table(a.str("table")), a.str("on"), a.int("at"), a.long("min"))
+    },
+    /** `census t by id on text` → [[graft.llm.TextOps.unigramCensus]]:
+      * the corpus-wide `(tok, cnt)` unigram model `lmscore … using`
+      * scores against — census on the reference corpus, lmscore at
+      * ingest everywhere else. */
+    Verb("census", table, byOn) { (s, a) =>
+      graft.llm.TextOps.unigramCensus(s.table(a.str("table")), a.str("by"), a.str("on"))
+    },
+    /** `drift a against b [top K]` → [[graft.llm.TextOps.censusDrift]]:
+      * total-variation distance + top drifted tokens between two census
+      * tables — the crawl-over-crawl monitor, fed by `census`. */
+    Verb("drift", table, Seq(req("against", Table), opt("top", PosInt, 10))) { (s, a) =>
+      def censusTable(name: String): DataFrame = {
+        val t = s.table(name)
+        require(t.columns.toSet == Set("tok", "cnt"),
+          s"drift needs (tok, cnt) census tables, got ${t.columns.mkString(", ")} in $name")
+        t
       }
-      else graft.llm.Dedup.exact(df, idCol, textCol)
-    val out = if (p.peekIs("order")) {
-      p.pop()
-      val cols = scala.collection.mutable.ArrayBuffer[String](p.pop())
-      while (p.peekIs(",")) { p.pop(); cols += p.pop() }
-      base.orderBy(cols.toSeq.map(col): _*)
-    } else base
-    require(p.done,
-      s"trailing tokens in ${if (near) "neardup" else "dedup"}: ${p.toks.mkString(" ")}")
-    out
-  }
-
-  /** `semdedup t by id on vec [within τ] [clusters k] [keep] [order …]`
-    * → [[graft.llm.Similarity.semDedupVictims]] (SemDeDup, Abbas et al.
-    * 2023): k-means the embedding space, exact cosine within clusters
-    * only, drop anything with a lower-id cluster-mate at cos ≥ τ
-    * (default 0.95, the paper's near-1 posture; `clusters` defaults 16).
-    * Returns the victim list (dropped_id, witness_id, cos); with `keep`
-    * the SURVIVING rows under min-id pruning; with `keep best <score>`
-    * the quality-aware survivors ([[graft.llm.Similarity
-    * .semDedupKeepBest]]: best-score member per semantic component,
-    * same election as `neardup … keep best`). */
-  private def runSemDedup(spark: SparkSession, p: P): DataFrame = {
-    val df = spark.table(p.pop())
-    p.expect("by"); val idCol = p.pop()
-    p.expect("on"); val vecCol = p.pop()
-    // `semdedup t by id on vec against 'path' [within τ]` — the
-    // INCREMENTAL face (q198's engine): probe the persisted IVF index
-    // for the nearest STORED neighbor; ≥ τ = semantic dup of it
-    if (p.peekIs("against")) {
-      p.pop()
-      val path = parseQuotedPath(p, "semdedup … against")
-      val tau = parseWithin(p, 0.9)
-      require(p.done, s"trailing tokens in semdedup against: ${p.toks.mkString(" ")}")
-      return graft.llm.Similarity.semDedupProbe(spark, path, df, tau,
-        idCol = idCol, vecCol = vecCol)
-    }
-    var tau = 0.95
-    if (p.peekIs("within")) { p.pop(); tau = p.pop().toDouble }
-    var k = 16
-    if (p.peekIs("clusters")) {
-      p.pop()
-      val t = p.pop()
-      require(t.forall(_.isDigit) && t.toInt > 0,
-        s"semdedup … clusters needs a positive count, got $t")
-      k = t.toInt
-    }
-    val keep = if (p.peekIs("keep")) { p.pop(); true } else false
-    val best: Option[String] =
-      if (keep && p.peekIs("best")) { p.pop(); Some(p.pop()) } else None
-    val base = best match {
-      case Some(sc) => graft.llm.Similarity.semDedupKeepBest(df, sc, tau,
-        nClusters = k, idCol = idCol, vecCol = vecCol)
-      case None if keep => graft.llm.Similarity.semDedup(df, tau,
-        nClusters = k, idCol = idCol, vecCol = vecCol)
-      case None => graft.llm.Similarity.semDedupVictims(df, tau,
-        nClusters = k, idCol = idCol, vecCol = vecCol)
-    }
-    val out = if (p.peekIs("order")) {
-      p.pop()
-      val cols = scala.collection.mutable.ArrayBuffer[String](p.pop())
-      while (p.peekIs(",")) { p.pop(); cols += p.pop() }
-      base.orderBy(cols.toSeq.map(col): _*)
-    } else base
-    require(p.done, s"trailing tokens in semdedup: ${p.toks.mkString(" ")}")
-    out
-  }
-
-  /** `compact 'path' [by c1, c2…] [sort s1… | zorder z1…] [into N]` →
-    * [[graft.io.Folio.compact]]: fold a fed folio's accumulated
-    * micro-batch files into N files per partition value under the
-    * atomic `_CURRENT` version swap; `sort` keeps the linear sorted-run
-    * convention, `zorder` switches to the Morton clustering (row-group
-    * stats then prune on ANY listed column). Returns the compacted
-    * read, so `t: compact '…' …` assigns like a select. */
-  /** `vacuum 'path'` → [[graft.io.Folio.vacuum]]: delete crash leftovers
-    * (orphaned version dirs beyond live+fallback, stale `_CURRENT.tmp`) —
-    * the maintenance-cadence sibling of `compact`; returns one row per
-    * removed name so the cadence job can log its work. */
-  private def runVacuum(spark: SparkSession, p: P): DataFrame = {
-    val path = parseQuotedPath(p, "vacuum")
-    require(p.done, s"trailing tokens in vacuum: ${p.toks.mkString(" ")}")
-    import spark.implicits._
-    graft.io.Folio.vacuum(path).toDF("removed")
-  }
-
-  private def runCompact(spark: SparkSession, p: P): DataFrame = {
-    val path = parseQuotedPath(p, "compact")
-    def nameList(): Seq[String] = {
-      val out = scala.collection.mutable.ArrayBuffer[String](p.pop())
-      while (p.peekIs(",")) { p.pop(); out += p.pop() }
-      out.toSeq
-    }
-    var parts: Seq[String] = Nil
-    var sorts: Seq[String] = Nil
-    var zs: Seq[String] = Nil
-    if (p.peekIs("by")) { p.pop(); parts = nameList() }
-    if (p.peekIs("sort")) { p.pop(); sorts = nameList() }
-    else if (p.peekIs("zorder")) { p.pop(); zs = nameList() }
-    var files = 1
-    if (p.peekIs("into")) {
-      p.pop()
-      val t = p.pop()
-      require(t.forall(_.isDigit) && t.toInt > 0,
-        s"compact … into needs a positive file count, got $t")
-      files = t.toInt
-    }
-    require(p.done, s"trailing tokens in compact: ${p.toks.mkString(" ")}")
-    graft.io.Folio.compact(spark, path, parts, sorts, files, zs)
-    graft.io.Folio.promotedRead(spark, path)
-  }
-
-  /** `chunk t by id on text size 64 [overlap 16]` →
-    * [[graft.llm.TextOps.chunk]]: fixed-size token windows advancing by
-    * size − overlap (the embedding-prep op; trailing chunk short, short
-    * docs one chunk). */
-  private def runChunk(spark: SparkSession, p: P): DataFrame = {
-    val df = spark.table(p.pop())
-    p.expect("by"); val idCol = p.pop()
-    p.expect("on"); val textCol = p.pop()
-    p.expect("size")
-    def posInt(what: String): Int = parsePosInt(p, s"chunk … $what")
-    val size = posInt("size")
-    val overlap = if (p.peekIs("overlap")) { p.pop(); posInt("overlap") } else 0
-    require(p.done, s"trailing tokens in chunk: ${p.toks.mkString(" ")}")
-    graft.llm.TextOps.chunk(df, idCol, textCol, size, overlap)
-  }
-
-  /** `index t by id on vec at 'path' [lists 16] [pq 8 16]` → the
-    * persisted-ANN writers: `lists` alone = IVF
-    * ([[graft.llm.Similarity.writeIvfIndex]]), `pq m ksub` alone = PQ
-    * codes-only store ([[graft.llm.Similarity.writePqIndex]]), both =
-    * the composed IVF-PQ ([[graft.llm.Similarity.writeIvfPqIndex]]).
-    * Returns the stored probe-ready layout read back (assigns like a
-    * select). */
-  private def runIndex(spark: SparkSession, p: P): DataFrame = {
-    val df = spark.table(p.pop())
-    p.expect("by"); val idCol = p.pop()
-    p.expect("on"); val vecCol = p.pop()
-    p.expect("at")
-    val path = parseQuotedPath(p, "index … at")
-    def posInt(what: String): Int = parseStrictPosInt(p, s"index … $what")
-    // `index t by id on vec at 'path' append` — INCREMENTAL maintenance:
-    // assign the batch against the STORED centroid model and append into
-    // the live version's list dirs (no retraining; retrain on a cadence
-    // with the build form, append between — the q133 posture)
-    if (p.peekIs("append")) {
-      p.pop()
-      require(p.done, s"trailing tokens in index append: ${p.toks.mkString(" ")}")
-      graft.llm.Similarity.appendToIvfIndex(df, path, idCol, vecCol)
-      return spark.read.parquet(s"${graft.llm.Similarity.indexRoot(path)}/lists")
-    }
-    var lists: Option[Int] = None
-    if (p.peekIs("lists")) { p.pop(); lists = Some(posInt("lists")) }
-    var pq: Option[(Int, Int)] = None
-    if (p.peekIs("pq")) {
-      p.pop()
-      val m = posInt("pq m"); val ksub = posInt("pq ksub")
-      pq = Some((m, ksub))
-    }
-    // `half` stores IVF list vectors on the fp16 tier (FLOAT1_ARRAY,
-    // enums.h:196); probes detect the tier from the stored schema
-    var half = false
-    if (p.peekIs("half")) { p.pop(); half = true }
-    require(p.done, s"trailing tokens in index: ${p.toks.mkString(" ")}")
-    require(!half || (lists.isDefined && pq.isEmpty),
-      "`half` applies to the IVF layout (lists N) — PQ codes are already sub-byte")
-    (lists, pq) match {
-      case (Some(nl), None) =>
-        graft.llm.Similarity.writeIvfIndex(df, path, nl, idCol = idCol, vecCol = vecCol,
-          halfPrecision = half)
-        spark.read.parquet(s"${graft.llm.Similarity.indexRoot(path)}/lists")
-      case (None, Some((m, ksub))) =>
-        graft.llm.Similarity.writePqIndex(df, path, m, ksub, idCol = idCol, vecCol = vecCol)
-        spark.read.parquet(s"${graft.llm.Similarity.indexRoot(path)}/codes")
-      case (Some(nl), Some((m, ksub))) =>
-        graft.llm.Similarity.writeIvfPqIndex(df, path, nl, m, ksub,
-          idCol = idCol, vecCol = vecCol)
-        spark.read.parquet(s"${graft.llm.Similarity.indexRoot(path)}/codes")
-      case (None, None) =>
-        throw new IllegalArgumentException(
+      graft.llm.TextOps.censusDrift(censusTable(a.str("table")),
+        censusTable(a.str("against")), a.int("top"))
+    },
+    /** `classify t by id on text [using weights] [dim N] [scale S]` →
+      * [[graft.llm.TextOps.hashedLinearScore]], the learned linear
+      * quality filter. `using` takes a `(bucket, w)` INTEGER-weight table
+      * (the offline-trained model, quantized to the 1/scale grid;
+      * unlisted buckets weigh 0); without it the deterministic synthetic
+      * grid stands in, whose own modulus is the default scale. The
+      * weight table is vocabulary-bounded model state (dim entries
+      * max), so the collect is the same bounded-model-state contract as
+      * the IVF centroid read. */
+    Verb("classify", table, byOn ++ Seq(opt("using", Table),
+        opt("dim", Bounded(1, 1000000), 1024), opt("scale", PosLong, 1997L))) { (s, a) =>
+      val dim = a.int("dim")
+      val weights = a.get[String]("using").map(s.table(_)) match {
+        case Some(t) =>
+          require(t.columns.toSet == Set("bucket", "w"),
+            s"classify … using needs a (bucket, w) weight table, got ${t.columns.mkString(", ")}")
+          val arr = new Array[Long](dim)
+          // bound BEFORE collecting (the BPE merge-table discipline): a
+          // valid model table has at most dim rows, so limit(dim+1) caps
+          // the driver materialization — a malformed million-row "weight
+          // table" errors loudly instead of OOMing the driver
+          val rows = t.limit(dim + 1).collect()
+          require(rows.length <= dim,
+            s"classify … using: weight table has more than dim=$dim rows — " +
+            "not a (bucket, w) model table (each bucket appears at most once)")
+          rows.foreach { r =>
+            val b = r.getAs[Number]("bucket").longValue()
+            require(b >= 0 && b < dim, s"weight bucket $b outside [0, $dim)")
+            arr(b.toInt) = r.getAs[Number]("w").longValue()
+          }
+          arr
+        case None => graft.llm.TextOps.syntheticWeights(dim)
+      }
+      graft.llm.TextOps.hashedLinearScore(s.table(a.str("table")), a.str("by"), a.str("on"),
+        weights, a.long("scale"), dim)
+    },
+    /** `classifytrain t by id on text label lbl [dim N] [epochs E]
+      * [scale S]` → [[graft.llm.TextOps.perceptronTrain]]: learn the
+      * (bucket, w) weight table `classify … using` deploys — the
+      * classifier's train/deploy loop from text, like bpetrain → bpe. */
+    Verb("classifytrain", table, byOn ++ Seq(req("label", Ident),
+        opt("dim", Bounded(1, 1000000), 1024), opt("epochs", Bounded(1, 100), 5),
+        opt("scale", PosLong, 1997L))) { (s, a) =>
+      graft.llm.TextOps.perceptronTrain(s.table(a.str("table")), a.str("by"), a.str("on"),
+        a.str("label"), a.int("dim"), a.int("epochs"), a.long("scale"))
+    },
+    /** `index t by id on vec at 'path' [lists N] [pq M K] [half]` → the
+      * persisted-ANN writers: `lists` alone = IVF
+      * ([[graft.llm.Similarity.writeIvfIndex]]), `pq M K` alone = the PQ
+      * codes-only store ([[graft.llm.Similarity.writePqIndex]]), both =
+      * the composed IVF-PQ ([[graft.llm.Similarity.writeIvfPqIndex]]);
+      * `half` stores IVF list vectors on the fp16 tier (FLOAT1_ARRAY,
+      * enums.h:196 — PQ codes are already sub-byte). `append` is the
+      * INCREMENTAL face: assign the batch against the STORED centroid
+      * model and append into the live version's list dirs (retrain on a
+      * cadence with the build form, append between — the q133 posture).
+      * Returns the stored probe-ready layout read back. */
+    Verb("index", table, byOn ++ Seq(req("at", Path), opt("append", Flag),
+        opt("lists", PosInt), opt("pq", Bounded(1, Int.MaxValue, 2)),
+        opt("half", Flag, needs = "lists")),
+      excl = Seq("append" -> Seq("lists", "pq"), "pq" -> Seq("half"))) { (s, a) =>
+      val (path, id, vec) = (a.str("at"), a.str("by"), a.str("on"))
+      def df = s.table(a.str("table"))
+      val layout = if (a.has("append")) {
+        graft.llm.Similarity.appendToIvfIndex(df, path, id, vec); "lists"
+      } else (a.get[Long]("lists").map(_.toInt), a.get[Seq[Long]]("pq").map(_.map(_.toInt))) match {
+        case (Some(nl), None) =>
+          graft.llm.Similarity.writeIvfIndex(df, path, nl, idCol = id, vecCol = vec,
+            halfPrecision = a.has("half")); "lists"
+        case (Some(nl), Some(Seq(m, ksub))) =>
+          graft.llm.Similarity.writeIvfPqIndex(df, path, nl, m, ksub, idCol = id, vecCol = vec)
+          "codes"
+        case (None, Some(Seq(m, ksub))) =>
+          graft.llm.Similarity.writePqIndex(df, path, m, ksub, idCol = id, vecCol = vec)
+          "codes"
+        case _ => throw new IllegalArgumentException(
           "index needs a layout: `lists N` (IVF), `pq M K` (codes-only), or both (IVF-PQ)")
-    }
-  }
-
-  /** `probe 'path' with q by id on vec top K [probes N] [rerank R]
-    * [using originals]` → the persisted-index probes; the index KIND is
-    * read from the stored model files, and the PQ forms require
-    * `using <table>` for the exact re-rank join. */
-  private def runProbe(spark: SparkSession, p: P): DataFrame = {
-    val path = parseQuotedPath(p, "probe")
-    p.expect("with"); val queries = spark.table(p.pop())
-    p.expect("by"); val idCol = p.pop()
-    p.expect("on"); val vecCol = p.pop()
-    p.expect("top")
-    def posInt(what: String): Int = parseStrictPosInt(p, s"probe … $what")
-    val k = posInt("top")
-    var nProbe = 4
-    if (p.peekIs("probes")) { p.pop(); nProbe = posInt("probes") }
-    var rerank = 32
-    if (p.peekIs("rerank")) { p.pop(); rerank = posInt("rerank") }
-    var originals: Option[DataFrame] = None
-    if (p.peekIs("using")) { p.pop(); originals = Some(spark.table(p.pop())) }
-    require(p.done, s"trailing tokens in probe: ${p.toks.mkString(" ")}")
-    // kind inference reads the LIVE version (versioned indexes publish
-    // under the Folio _CURRENT protocol; legacy flat layouts resolve to
-    // the path itself), so a mid-rewrite crash can't change the kind
-    val root = graft.llm.Similarity.indexRoot(path)
-    val hasCentroids = new java.io.File(root, "centroids.json").isFile
-    val hasBooks = new java.io.File(root, "codebooks.json").isFile
-    (hasCentroids, hasBooks) match {
-      case (true, false) =>
-        graft.llm.Similarity.ivfTopKIndexed(spark, path, queries, k, nProbe,
-          idCol, vecCol)
-      case (false, true) =>
-        val orig = originals.getOrElse(throw new IllegalArgumentException(
-          "probe of a PQ index needs `using <originals>` for the exact re-rank"))
-        graft.llm.Similarity.pqTopKIndexed(spark, path, queries, orig, k, rerank,
-          idCol, vecCol)
-      case (true, true) =>
-        val orig = originals.getOrElse(throw new IllegalArgumentException(
-          "probe of an IVF-PQ index needs `using <originals>` for the exact re-rank"))
-        graft.llm.Similarity.ivfPqTopKIndexed(spark, path, queries, orig, k,
-          nProbe, rerank, idCol, vecCol)
-      case (false, false) =>
-        throw new IllegalArgumentException(s"no index at $path")
-    }
-  }
-
-  /** `lmscore t by id on text [using model]` →
-    * [[graft.llm.TextOps.unigramStats]] (self-census) or
-    * [[graft.llm.TextOps.unigramScore]] against a census TABLE
-    * `(tok, cnt)` — the deployment split: train the model once, score
-    * any corpus (or stream) against it. */
-  private def runLmScore(spark: SparkSession, p: P): DataFrame = {
-    val df = spark.table(p.pop())
-    p.expect("by"); val idCol = p.pop()
-    p.expect("on"); val textCol = p.pop()
-    val model: Option[DataFrame] =
-      if (p.peekIs("using")) { p.pop(); Some(spark.table(p.pop())) } else None
-    require(p.done, s"trailing tokens in lmscore: ${p.toks.mkString(" ")}")
-    model match {
-      case Some(census) =>
-        require(census.columns.toSet == Set("tok", "cnt"),
-          s"lmscore … using needs a (tok, cnt) census table, got ${census.columns.mkString(", ")}")
-        graft.llm.TextOps.unigramScore(df, census, idCol, textCol)
-      case None => graft.llm.TextOps.unigramStats(df, idCol, textCol)
-    }
-  }
-
-  /** `census t by id on text` → [[graft.llm.TextOps.unigramCensus]]:
-    * build the corpus-wide `(tok, cnt)` unigram model — the table
-    * `lmscore … using <census>` scores against. Completes the
-    * train/deploy loop in the dialect: census on the reference corpus,
-    * lmscore-at-ingest everywhere else. */
-  private def runCensus(spark: SparkSession, p: P): DataFrame = {
-    val df = spark.table(p.pop())
-    p.expect("by"); val idCol = p.pop()
-    p.expect("on"); val textCol = p.pop()
-    require(p.done, s"trailing tokens in census: ${p.toks.mkString(" ")}")
-    graft.llm.TextOps.unigramCensus(df, idCol, textCol)
-  }
-
-  /** `drift a against b [top K]` → [[graft.llm.TextOps.censusDrift]]:
-    * total-variation distance + top drifted tokens between two census
-    * tables — the crawl-over-crawl monitor, fed by the `census` verb. */
-  private def runDrift(spark: SparkSession, p: P): DataFrame = {
-    def censusTable(name: String): DataFrame = {
-      val t = spark.table(name)
-      require(t.columns.toSet == Set("tok", "cnt"),
-        s"drift needs (tok, cnt) census tables, got ${t.columns.mkString(", ")} in $name")
-      t
-    }
-    val a = censusTable(p.pop())
-    p.expect("against")
-    val b = censusTable(p.pop())
-    var topK = 10
-    if (p.peekIs("top")) {
-      p.pop()
-      val t = p.pop()
-      require(t.forall(_.isDigit) && t.toInt > 0,
-        s"drift … top needs a positive int, got $t")
-      topK = t.toInt
-    }
-    require(p.done, s"trailing tokens in drift: ${p.toks.mkString(" ")}")
-    graft.llm.TextOps.censusDrift(a, b, topK)
-  }
-
-  /** `classify t by id on text [using weights] [dim N] [scale S]` →
-    * [[graft.llm.TextOps.hashedLinearScore]] — the learned linear
-    * quality filter. `using` takes a `(bucket, w)` INTEGER-weight table
-    * (the offline-trained model, quantized to the 1/scale grid;
-    * unlisted buckets weigh 0); without it the deterministic synthetic
-    * grid stands in (scale fixed at 1997 there — the grid's own
-    * modulus). The weight table is vocabulary-bounded model state
-    * (dim entries max), so the collect is the same bounded-model-state
-    * contract as the IVF centroid read. */
-  private def runClassify(spark: SparkSession, p: P): DataFrame = {
-    val df = spark.table(p.pop())
-    p.expect("by"); val idCol = p.pop()
-    p.expect("on"); val textCol = p.pop()
-    var wtable: Option[DataFrame] = None
-    if (p.peekIs("using")) { p.pop(); wtable = Some(spark.table(p.pop())) }
-    def posLong(what: String): Long = {
-      val t = p.pop()
-      require(t.forall(_.isDigit) && t.toLong > 0,
-        s"classify … $what needs a positive int, got $t")
-      t.toLong
-    }
-    var dim = 1024
-    if (p.peekIs("dim")) {
-      p.pop()
-      val d = posLong("dim")
-      require(d <= 1000000, s"classify … dim must be <= 1e6, got $d")
-      dim = d.toInt
-    }
-    var scale = 1997L
-    if (p.peekIs("scale")) { p.pop(); scale = posLong("scale") }
-    require(p.done, s"trailing tokens in classify: ${p.toks.mkString(" ")}")
-    val weights = wtable match {
-      case Some(t) =>
-        require(t.columns.toSet == Set("bucket", "w"),
-          s"classify … using needs a (bucket, w) weight table, got ${t.columns.mkString(", ")}")
-        val arr = new Array[Long](dim)
-        // bound BEFORE collecting (the BPE merge-table discipline): a
-        // valid model table has at most dim rows, so limit(dim+1) caps
-        // the driver materialization — a malformed million-row "weight
-        // table" errors loudly instead of OOMing the driver
-        val rows = t.limit(dim + 1).collect()
-        require(rows.length <= dim,
-          s"classify … using: weight table has more than dim=$dim rows — " +
-          "not a (bucket, w) model table (each bucket appears at most once)")
-        rows.foreach { r =>
-          val b = r.getAs[Number]("bucket").longValue()
-          require(b >= 0 && b < dim, s"weight bucket $b outside [0, $dim)")
-          arr(b.toInt) = r.getAs[Number]("w").longValue()
+      }
+      s.read.parquet(s"${graft.llm.Similarity.indexRoot(path)}/$layout")
+    },
+    /** `probe 'path' with q by id on vec top K [probes N] [rerank R]
+      * [using originals]` → the persisted-index probes; the index KIND is
+      * read from the stored model files, and the PQ forms require
+      * `using <table>` for the exact re-rank join. */
+    Verb("probe", path, Seq(req("with", Table), req("by", Ident), req("on", Ident),
+        req("top", PosInt), opt("probes", PosInt, 4), opt("rerank", PosInt, 32),
+        opt("using", Table))) { (s, a) =>
+      val (path, queries, id, vec) = (a.str("path"), s.table(a.str("with")), a.str("by"), a.str("on"))
+      val (k, nProbe, rerank) = (a.int("top"), a.int("probes"), a.int("rerank"))
+      def originals(kind: String): DataFrame = a.get[String]("using").map(s.table(_))
+        .getOrElse(throw new IllegalArgumentException(
+          s"probe of a$kind index needs `using <originals>` for the exact re-rank"))
+      // kind inference reads the LIVE version (versioned indexes publish
+      // under the Folio _CURRENT protocol; legacy flat layouts resolve to
+      // the path itself), so a mid-rewrite crash can't change the kind
+      val root = graft.llm.Similarity.indexRoot(path)
+      (new java.io.File(root, "centroids.json").isFile,
+       new java.io.File(root, "codebooks.json").isFile) match {
+        case (true, false) =>
+          graft.llm.Similarity.ivfTopKIndexed(s, path, queries, k, nProbe, id, vec)
+        case (false, true) => graft.llm.Similarity.pqTopKIndexed(s, path, queries,
+          originals(" PQ"), k, rerank, id, vec)
+        case (true, true) => graft.llm.Similarity.ivfPqTopKIndexed(s, path, queries,
+          originals("n IVF-PQ"), k, nProbe, rerank, id, vec)
+        case (false, false) => throw new IllegalArgumentException(s"no index at $path")
+      }
+    },
+    /** `sample t by key at '29'` → [[graft.llm.Pipeline.hashSample]]:
+      * the deterministic md5-prefix Bernoulli cut (key column cast to
+      * string; the quoted hex ceiling IS the rate — '29' ≈ 16%). Same
+      * engine-portable, partition-invariant contract as the q64 API
+      * path; map-only, the filter pushes into the scan. */
+    Verb("sample", table, Seq(req("by", Ident), req("at", Hex))) { (s, a) =>
+      graft.llm.Pipeline.hashSample(s.table(a.str("table")), col(a.str("by")).cast("string"),
+        a.str("at"))
+    },
+    /** `shard t by key into 8` → [[graft.llm.Pipeline.shardAssignment]]:
+      * the deterministic corpus shuffle — shard + in-shard rank as pure
+      * md5 functions of the key, replayable on any cluster shape. */
+    Verb("shard", table, Seq(req("by", Ident), req("into", PosInt))) { (s, a) =>
+      graft.llm.Pipeline.shardAssignment(s.table(a.str("table")),
+        col(a.str("by")).cast("string"), a.int("into"))
+    },
+    /** `cap t by strata at 40 on key` → [[graft.llm.Pipeline.capPerStratum]]:
+      * the absolute per-stratum ceiling (≤ N rows per stratum, the rows
+      * that sort first by md5(key) — deterministic, engine-portable). */
+    Verb("cap", table, Seq(req("by", Ident), req("at", PosInt), req("on", Ident))) { (s, a) =>
+      graft.llm.Pipeline.capPerStratum(s.table(a.str("table")), col(a.str("by")),
+        col(a.str("on")).cast("string"), a.int("at"))
+    },
+    /** `top t by k1[, k2] at 3 order c1[, -c2, …]` — top-N rows per
+      * group under an explicit order (q's `N # select … by sym` sublist
+      * idiom; `cap`'s score-ordered sibling — cap ranks by md5 for an
+      * unbiased ceiling, top ranks by the caller's columns). Lowers to
+      * row_number over one window + filter, which Spark rewrites to
+      * WindowGroupLimit PARTIAL limits before the shuffle — each
+      * partition forwards at most N rows per key, the only top-k shape
+      * that survives 100 TB. Give the order a total tiebreak (trailing
+      * unique column) for deterministic output. */
+    Verb("top", table, Seq(req("by", Idents()), req("at", PosInt),
+        req("order", OrderCols))) { (s, a) =>
+      val df = s.table(a.str("table"))
+      val op = new P(a[List[String]]("order"))
+      val cols = parseOrderCols(op, new Env(Some(df.schema), Map.empty))
+      require(op.done, s"trailing tokens in top: ${op.toks.mkString(" ")}")
+      import org.apache.spark.sql.expressions.Window
+      val w = Window.partitionBy(a.names("by").map(col): _*).orderBy(cols: _*)
+      df.withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") <= a.int("at")).drop("__rn")
+    },
+    /** `compact 'path' [by c1, c2…] [sort s1… | zorder z1…] [into N]` →
+      * [[graft.io.Folio.compact]]: fold a fed folio's accumulated
+      * micro-batch files into N files per partition value under the
+      * atomic `_CURRENT` version swap; `sort` keeps the linear sorted-run
+      * convention, `zorder` switches to the Morton clustering (row-group
+      * stats then prune on ANY listed column). A FILE verb like >>/<<:
+      * the quoted path keeps `compact(x)` an expression over user
+      * names. Returns the compacted read. */
+    Verb("compact", path, Seq(opt("by", Idents()), opt("sort", Idents()),
+        opt("zorder", Idents()), opt("into", PosInt, 1)),
+      excl = Seq("sort" -> Seq("zorder"))) { (s, a) =>
+      graft.io.Folio.compact(s, a.str("path"), a.names("by"), a.names("sort"),
+        a.int("into"), a.names("zorder"))
+      graft.io.Folio.promotedRead(s, a.str("path"))
+    },
+    /** `vacuum 'path'` → [[graft.io.Folio.vacuum]]: delete crash leftovers
+      * (orphaned version dirs beyond live+fallback, stale `_CURRENT.tmp`)
+      * — the maintenance-cadence sibling of `compact`; one row per
+      * removed name so the cadence job can log its work. */
+    Verb("vacuum", path) { (s, a) =>
+      import s.implicits._
+      graft.io.Folio.vacuum(a.str("path")).toDF("removed")
+    },
+    /** `rollup 'path'` — read the maintained aggregate;
+      * `rollup 'path' append t by k1[, k2] on v1[, v2]` — one atomic
+      * manifest-committed append folding t's partial into the stored
+      * rollup, returning the updated aggregate. The dialect face of
+      * [[graft.io.Folio.appendWithRollup]]/[[graft.io.Folio.rollupRead]]. */
+    Verb("rollup", path, Seq(opt("append", Table), req("by", Idents(), needs = "append"),
+        req("on", Idents(), needs = "append"))) { (s, a) =>
+      a.get[String]("append").foreach(t => graft.io.Folio.appendWithRollup(s.table(t),
+        a.str("path"), a.names("by"), a.names("on")))
+      graft.io.Folio.rollupRead(s, a.str("path"))
+    },
+    /** `pivot t by k1[, k2] on p in ('a', 'b', …) agg fn(c)` — the kdb
+      * pivot idiom (Kerf1/q heritage): one wide row per key with one
+      * column per ENUMERATED value of `p` (quoted strings or bare
+      * numbers — a numeric axis is as common as a string one), cells
+      * aggregated by fn. The value domain is explicit — output columns
+      * are part of the query's contract, never a data-dependent
+      * surprise (and the lowering stays one groupBy.pivot pass with no
+      * discovery scan). Absent (key, value) cells are null. */
+    Verb("pivot", table, Seq(req("by", Idents()), req("on", Ident), req("in", Lits),
+        req("agg", Call(Seq("sum", "avg", "min", "max", "count"))))) { (s, a) =>
+      val (fn, c) = a[(String, String)]("agg")
+      val aggCol = fn match {
+        case "sum" => sum(col(c)); case "avg" => avg(col(c))
+        case "min" => min(col(c)); case "max" => max(col(c))
+        case "count" => count(col(c))
+      }
+      s.table(a.str("table")).groupBy(a.names("by").map(col): _*)
+        .pivot(a.str("on"), a[Seq[Any]]("in")).agg(aggCol)
+    },
+    /** `unpivot t by k1[, k2] on (c1, c2, …) as namecol, valcol` — the
+      * melt inverse of `pivot`: the enumerated wide columns fold into
+      * (namecol, valcol) rows per key. Null cells SURVIVE as null valcol
+      * rows (the exact pivot round-trip — engines that drop nulls on
+      * unpivot silently lose the fact that a cell was absent). Wide
+      * columns must share a type family (they widen to one). */
+    Verb("unpivot", table, Seq(req("by", Idents()), req("on", ParenNames),
+        req("as", Idents(2, 2)))) { (s, a) =>
+      val Seq(nameCol, valCol) = a.names("as")
+      s.table(a.str("table")).unpivot(a.names("by").map(col).toArray,
+        a.names("on").map(col).toArray, nameCol, valCol)
+    },
+    /** `ungroup t [on c1, c2]` — q's ungroup, the inverse of the
+      * `collect` aggregate: every array column (or the named ones)
+      * explodes in LOCKSTEP — row i of each vector lands on the same
+      * output row — while scalar columns repeat. Ragged vectors in one
+      * row are a LOUD error (q's 'length), not a silent null-pad; a row
+      * whose vectors are empty (or all null) contributes no rows, q's
+      * convention. One generate, no shuffle — scales at scan speed. */
+    Verb("ungroup", table, Seq(opt("on", Idents()))) { (s, a) =>
+      val df = s.table(a.str("table"))
+      val arrCols = if (a.has("on")) a.names("on")
+        else df.schema.fields.filter(_.dataType.isInstanceOf[ArrayType]).map(_.name).toSeq
+      require(arrCols.nonEmpty,
+        "ungroup: no array columns — nothing to explode (collect first, " +
+        "or name columns with `on`)")
+      arrCols.foreach(c => require(df.schema(c).dataType.isInstanceOf[ArrayType],
+        s"ungroup: '$c' is ${df.schema(c).dataType.simpleString}, not an array"))
+      // the rag guard lives INSIDE the exploded column so Catalyst can
+      // never prune it (the meanPool discipline). A NULL vector counts as
+      // size 0 (q's null ~ empty): an all-null row contributes no rows —
+      // without the coalesce the size comparison is NULL and the when()
+      // would fall through to the rag error instead of skipping the row.
+      def sz(c: String) = coalesce(size(col(c)), lit(0))
+      val sz0 = sz(arrCols.head)
+      val allEq = arrCols.tail.foldLeft(lit(true))((acc, c) => acc && sz(c) === sz0)
+      val zipped =
+        if (arrCols.lengthCompare(1) == 0) col(arrCols.head)
+        else when(allEq, arrays_zip(arrCols.map(col): _*))
+          .otherwise(raise_error(concat(
+            lit("ungroup: ragged vectors in one row (sizes "),
+            concat_ws(",", arrCols.map(c => size(col(c)).cast("string")): _*),
+            lit(") — q's 'length error; align or pad upstream"))))
+      val scalarCols = df.columns.filterNot(arrCols.contains)
+      val exploded = df
+        .select(scalarCols.map(col) :+ explode(zipped).as("__zs"): _*)
+      // original column order; single-column form explodes the bare value
+      exploded.select(df.columns.toSeq.map { n =>
+        if (!arrCols.contains(n)) col(n).as(n)
+        else if (arrCols.lengthCompare(1) == 0) col("__zs").as(n)
+        else col("__zs")(n).as(n)
+      }: _*)
+    },
+    /** `uj t1, t2[, t3 …]` — q's UNION JOIN (Kerf1 heritage; the
+      * table-level face of §2.7 union): union with SCHEMA ALIGNMENT.
+      * The output carries every column ANY input has in first-appearance
+      * order; missing columns fill with null; same-named numeric columns
+      * WIDEN through the Folio append lattice (promote, never truncate —
+      * the appendWithPromotion rule applied across tables). Incompatible
+      * same-named types (string vs long) fail loudly. */
+    Verb("uj", Clause("tables", Idents(2))) { (s, a) =>
+      val tables = a.names("tables").map(s.table(_))
+      // CASE-INSENSITIVE name identity (the session's caseSensitive=false
+      // resolution): `Price` in t1 and `price` in t2 are ONE union column
+      // under the first-appearance spelling, not two half-null columns
+      val names = tables.flatMap(_.schema.map(_.name))
+        .foldLeft(Vector.empty[String]) { (acc, n) =>
+          if (acc.exists(_.equalsIgnoreCase(n))) acc else acc :+ n
         }
-        arr
-      case None => graft.llm.TextOps.syntheticWeights(dim)
-    }
-    graft.llm.TextOps.hashedLinearScore(df, idCol, textCol, weights, scale, dim)
-  }
+      val target = names.map { n =>
+        n -> tables.flatMap(_.schema.find(_.name.equalsIgnoreCase(n)))
+          .map(_.dataType).reduce(graft.io.Folio.widen)
+      }.toMap
+      tables.map { t =>
+        val have = t.columns.map(_.toLowerCase).toSet
+        t.select(names.map(n =>
+          (if (have(n.toLowerCase)) col(n).cast(target(n))
+           else lit(null).cast(target(n))).as(n)): _*)
+      }.reduce(_.unionByName(_))
+    })
 
-  /** `rollup 'path'` — read the maintained aggregate;
-    * `rollup 'path' append t by k1[, k2] on v1[, v2]` — one atomic
-    * manifest-committed append folding t's partial into the stored
-    * rollup, returning the updated aggregate. The dialect face of
-    * [[graft.io.Folio.appendWithRollup]]/[[graft.io.Folio.rollupRead]]
-    * (path-first like compact/vacuum). */
-  private def runRollup(spark: SparkSession, p: P): DataFrame = {
-    val path = parseQuotedPath(p, "rollup")
-    if (p.done) graft.io.Folio.rollupRead(spark, path)
-    else {
-      p.expect("append")
-      val df = spark.table(p.pop())
-      p.expect("by")
-      val keys = scala.collection.mutable.ArrayBuffer[String](p.pop())
-      while (p.peekIs(",")) { p.pop(); keys += p.pop() }
-      p.expect("on")
-      val vals = scala.collection.mutable.ArrayBuffer[String](p.pop())
-      while (p.peekIs(",")) { p.pop(); vals += p.pop() }
-      require(p.done, s"trailing tokens in rollup: ${p.toks.mkString(" ")}")
-      graft.io.Folio.appendWithRollup(df, path, keys.toSeq, vals.toSeq)
-      graft.io.Folio.rollupRead(spark, path)
-    }
-  }
+  private val verbsByName: Map[String, Verb] = pipelineVerbs.map(v => v.name -> v).toMap
 
-  /** `classifytrain t by id on text label lbl [dim 1024] [epochs 5]
-    * [scale 1997]` → [[graft.llm.TextOps.perceptronTrain]]: learn the
-    * (bucket, w) weight table `classify … using` deploys — the
-    * classifier's train/deploy loop from text, like bpetrain → bpe. */
-  private def runClassifyTrain(spark: SparkSession, p: P): DataFrame = {
-    val df = spark.table(p.pop())
-    p.expect("by"); val idCol = p.pop()
-    p.expect("on"); val textCol = p.pop()
-    p.expect("label"); val labelCol = p.pop()
-    var dim = 1024; var epochs = 5; var scale = 1997L
-    def posLong(what: String): Long = {
-      val t = p.pop()
-      require(t.forall(_.isDigit) && t.toLong > 0,
-        s"classifytrain … $what needs a positive int, got $t")
-      t.toLong
-    }
-    while (!p.done) {
-      val kw = p.pop().toLowerCase
-      kw match {
-        case "dim" =>
-          val d = posLong("dim")
-          require(d <= 1000000, s"classifytrain … dim must be <= 1e6, got $d")
-          dim = d.toInt
-        case "epochs" =>
-          val e = posLong("epochs")
-          require(e <= 100, s"classifytrain … epochs must be <= 100, got $e")
-          epochs = e.toInt
-        case "scale" => scale = posLong("scale")
-        case other => throw new IllegalArgumentException(
-          s"trailing tokens in classifytrain: $other ${p.toks.mkString(" ")}")
-      }
-    }
-    graft.llm.TextOps.perceptronTrain(df, idCol, textCol, labelCol, dim, epochs, scale)
-  }
+  /** The pipeline verbs' names (REPL completion). */
+  private[graft] val verbNames: Seq[String] = pipelineVerbs.map(_.name)
 
-  /** `top t by k1[, k2] at 3 order c1[, -c2, …]` — top-N rows per
-    * group under an explicit order (q's `N # select … by sym` sublist
-    * idiom; `cap`'s score-ordered sibling — cap ranks by md5 for an
-    * unbiased ceiling, top ranks by the caller's columns). Lowers to
-    * row_number over one window + filter, which Spark rewrites to
-    * WindowGroupLimit PARTIAL limits before the shuffle — each
-    * partition forwards at most N rows per key, the only top-k shape
-    * that survives 100 TB. Give the order a total tiebreak (trailing
-    * unique column) for deterministic output. */
-  private def runTop(spark: SparkSession, p: P): DataFrame = {
-    val df = spark.table(p.pop())
-    p.expect("by")
-    val keys = scala.collection.mutable.ArrayBuffer[String](p.pop())
-    while (p.peekIs(",")) { p.pop(); keys += p.pop() }
-    p.expect("at")
-    val n = {
-      val t = p.pop()
-      require(t.forall(_.isDigit) && t.toInt > 0,
-        s"top … at needs a positive row count, got $t")
-      t.toInt
-    }
-    p.expect("order")
-    val cols = parseOrderCols(p, new Env(Some(df.schema), Map.empty))
-    require(p.done, s"trailing tokens in top: ${p.toks.mkString(" ")}")
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(keys.toSeq.map(col): _*).orderBy(cols: _*)
-    df.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= n).drop("__rn")
-  }
+  /** The verb a statement's tokens invoke, when its head shape holds. */
+  private def verbOf(toks: List[String]): Option[Verb] =
+    toks.headOption.flatMap(h => verbsByName.get(h.toLowerCase)).filter(_.matches(toks))
 
-  /** `sample t by key at '29'` → [[graft.llm.Pipeline.hashSample]]:
-    * the deterministic md5-prefix Bernoulli cut (key column cast to
-    * string; the quoted hex ceiling IS the rate — '29' ≈ 16%). Same
-    * engine-portable, partition-invariant contract as the q64 API
-    * path; map-only, the filter pushes into the scan. */
-  private def runSample(spark: SparkSession, p: P): DataFrame = {
-    val df = spark.table(p.pop())
-    p.expect("by"); val keyCol = p.pop()
-    p.expect("at")
-    val ceil = {
-      val t = p.pop()
-      require(t.startsWith("'") && t.endsWith("'") && t.length > 2,
-        s"sample … at needs a quoted hex ceiling like '29', got $t")
-      unq(t)
-    }
-    require(ceil.forall(c => c.isDigit || ('a' <= c && c <= 'f')),
-      s"sample ceiling must be lowercase hex, got '$ceil'")
-    require(p.done, s"trailing tokens in sample: ${p.toks.mkString(" ")}")
-    graft.llm.Pipeline.hashSample(df, col(keyCol).cast("string"), ceil)
-  }
-
-  /** `shard t by key into 8` → [[graft.llm.Pipeline.shardAssignment]]:
-    * the deterministic corpus shuffle — shard + in-shard rank as pure
-    * md5 functions of the key, replayable on any cluster shape. */
-  private def runShard(spark: SparkSession, p: P): DataFrame = {
-    val df = spark.table(p.pop())
-    p.expect("by"); val keyCol = p.pop()
-    p.expect("into")
-    val n = {
-      val t = p.pop()
-      require(t.forall(_.isDigit) && t.toInt > 0,
-        s"shard … into needs a positive shard count, got $t")
-      t.toInt
-    }
-    require(p.done, s"trailing tokens in shard: ${p.toks.mkString(" ")}")
-    graft.llm.Pipeline.shardAssignment(df, col(keyCol).cast("string"), n)
-  }
-
-  /** `<verb> <table> by …` — the only statement shape the pipeline
-    * verbs own. The verb names are NOT reserved words (the reference
-    * reserves only control/number/SQL heads, lexer.h:100-105), so
-    * `cap(99)` or `sample + 1` must stay expressions over user names —
-    * dispatch to a pipeline verb only when the table-form shape holds. */
-  /** `pivot t by k1[, k2] on p in ('a', 'b', …) agg fn(c)` — the kdb
-    * pivot idiom (Kerf1/q heritage): one wide row per key with one
-    * column per ENUMERATED value of `p`, cells aggregated by fn. The
-    * value domain is explicit — output columns are part of the query's
-    * contract, never a data-dependent surprise (and the lowering stays
-    * one groupBy.pivot pass with no discovery scan). Absent
-    * (key, value) cells are null. */
-  private def runPivot(spark: SparkSession, p: P): DataFrame = {
-    val df = spark.table(p.pop())
-    p.expect("by")
-    val keys = scala.collection.mutable.ArrayBuffer[String](p.pop())
-    while (p.peekIs(",")) { p.pop(); keys += p.pop() }
-    p.expect("on")
-    val pcol = p.pop()
-    p.expect("in")
-    p.expect("(")
-    // quoted strings or bare numeric literals — a numeric pivot axis
-    // (line numbers, bucket ids) is as common as a string one
-    def pval(t: String): Any =
-      if (t.startsWith("'") && t.endsWith("'")) unq(t)
-      else if (t.matches("""\d+""")) t.toLong
-      else if (t.matches("""\d+\.\d+""")) t.toDouble
-      else throw new IllegalArgumentException(
-        s"pivot values must be quoted strings or numeric literals, got $t")
-    val vals = scala.collection.mutable.ArrayBuffer[Any](pval(p.pop()))
-    while (p.peekIs(",")) { p.pop(); vals += pval(p.pop()) }
-    p.expect(")")
-    p.expect("agg")
-    val fn = p.pop().toLowerCase
-    require(fbyAggFns(fn) && fn != "pctl",
-      s"pivot agg must be one of sum/avg/min/max/count, got '$fn'")
-    p.expect("(")
-    val c = p.pop()
-    p.expect(")")
-    require(p.done, s"trailing tokens in pivot: ${p.toks.mkString(" ")}")
-    val aggCol = fn match {
-      case "sum" => sum(col(c)); case "avg" => avg(col(c))
-      case "min" => min(col(c)); case "max" => max(col(c))
-      case "count" => count(col(c))
-    }
-    df.groupBy(keys.toSeq.map(col): _*)
-      .pivot(pcol, vals.toSeq)
-      .agg(aggCol)
-  }
-
-  /** `unpivot t by k1[, k2] on (c1, c2, …) as namecol, valcol` — the
-    * melt inverse of [[runPivot]]: the enumerated wide columns fold
-    * into (namecol, valcol) rows per key. Null cells SURVIVE as null
-    * valcol rows (the exact pivot round-trip — engines that drop
-    * nulls on unpivot silently lose the fact that a cell was absent).
-    * Wide columns must share a type family (they widen to one). */
-  private def runUnpivot(spark: SparkSession, p: P): DataFrame = {
-    val df = spark.table(p.pop())
-    p.expect("by")
-    val keys = scala.collection.mutable.ArrayBuffer[String](p.pop())
-    while (p.peekIs(",")) { p.pop(); keys += p.pop() }
-    p.expect("on")
-    p.expect("(")
-    val vals = scala.collection.mutable.ArrayBuffer[String](p.pop())
-    while (p.peekIs(",")) { p.pop(); vals += p.pop() }
-    p.expect(")")
-    p.expect("as")
-    val nameCol = p.pop()
-    p.expect(",")
-    val valCol = p.pop()
-    require(p.done, s"trailing tokens in unpivot: ${p.toks.mkString(" ")}")
-    df.unpivot(keys.toSeq.map(col).toArray, vals.toSeq.map(col).toArray,
-      nameCol, valCol)
-  }
-
-  /** `ungroup t [on c1, c2]` — q's ungroup, the inverse of the
-    * `collect` aggregate: every array column (or the named ones)
-    * explodes in LOCKSTEP — row i of each vector lands on the same
-    * output row — while scalar columns repeat. Ragged vectors in one
-    * row are a LOUD error (q's 'length), not a silent null-pad; a row
-    * whose vectors are empty (or all null) contributes no rows, q's
-    * convention. One generate, no shuffle — scales at scan speed. */
-  private def runUngroup(spark: SparkSession, p: P): DataFrame = {
-    import org.apache.spark.sql.types.ArrayType
-    val df = spark.table(p.pop())
-    val arrCols: Seq[String] =
-      if (p.peekIs("on")) {
-        p.pop()
-        val cs = scala.collection.mutable.ArrayBuffer[String](p.pop())
-        while (p.peekIs(",")) { p.pop(); cs += p.pop() }
-        cs.toSeq
-      } else df.schema.fields.filter(_.dataType.isInstanceOf[ArrayType]).map(_.name).toSeq
-    require(p.done, s"trailing tokens in ungroup: ${p.toks.mkString(" ")}")
-    require(arrCols.nonEmpty,
-      "ungroup: no array columns — nothing to explode (collect first, " +
-      "or name columns with `on`)")
-    arrCols.foreach(c => require(df.schema(c).dataType.isInstanceOf[ArrayType],
-      s"ungroup: '$c' is ${df.schema(c).dataType.simpleString}, not an array"))
-    // the rag guard lives INSIDE the exploded column so Catalyst can
-    // never prune it (the meanPool discipline). A NULL vector counts as
-    // size 0 (q's null ~ empty): an all-null row contributes no rows —
-    // without the coalesce the size comparison is NULL and the when()
-    // would fall through to the rag error instead of skipping the row.
-    def sz(c: String) = coalesce(size(col(c)), lit(0))
-    val sz0 = sz(arrCols.head)
-    val allEq = arrCols.tail.foldLeft(lit(true))((acc, c) => acc && sz(c) === sz0)
-    val zipped =
-      if (arrCols.lengthCompare(1) == 0) col(arrCols.head)
-      else when(allEq, arrays_zip(arrCols.map(col): _*))
-        .otherwise(raise_error(concat(
-          lit("ungroup: ragged vectors in one row (sizes "),
-          concat_ws(",", arrCols.map(c => size(col(c)).cast("string")): _*),
-          lit(") — q's 'length error; align or pad upstream"))))
-    val scalarCols = df.columns.filterNot(arrCols.contains)
-    val exploded = df
-      .select(scalarCols.map(col) :+ explode(zipped).as("__zs"): _*)
-    // original column order; single-column form explodes the bare value
-    exploded.select(df.columns.toSeq.map { n =>
-      if (!arrCols.contains(n)) col(n).as(n)
-      else if (arrCols.lengthCompare(1) == 0) col("__zs").as(n)
-      else col("__zs")(n).as(n)
-    }: _*)
-  }
-
-  /** `uj t1, t2[, t3 …]` — q's UNION JOIN (Kerf1 heritage; the
-    * table-level face of §2.7 union): union with SCHEMA ALIGNMENT.
-    * The output carries every column ANY input has in first-appearance
-    * order; missing columns fill with null; same-named numeric columns
-    * WIDEN through the Folio append lattice (promote, never truncate —
-    * the appendWithPromotion rule applied across tables). Incompatible
-    * same-named types (string vs long) fail loudly. */
-  private def runUj(spark: SparkSession, p: P): DataFrame = {
-    val tables = scala.collection.mutable.ArrayBuffer[DataFrame](spark.table(p.pop()))
-    while (p.peekIs(",")) { p.pop(); tables += spark.table(p.pop()) }
-    require(p.done, s"trailing tokens in uj: ${p.toks.mkString(" ")}")
-    require(tables.lengthCompare(2) >= 0, "uj needs at least two tables")
-    // CASE-INSENSITIVE name identity (the session's caseSensitive=false
-    // resolution): `Price` in t1 and `price` in t2 are ONE union column
-    // under the first-appearance spelling, not two half-null columns
-    val names = tables.flatMap(_.schema.map(_.name))
-      .foldLeft(Vector.empty[String]) { (acc, n) =>
-        if (acc.exists(_.equalsIgnoreCase(n))) acc else acc :+ n
-      }
-    val target = names.map { n =>
-      n -> tables.flatMap(_.schema.find(_.name.equalsIgnoreCase(n)))
-        .map(_.dataType).reduce(graft.io.Folio.widen)
-    }.toMap
-    tables.map { t =>
-      val have = t.columns.map(_.toLowerCase).toSet
-      t.select(names.map(n =>
-        (if (have(n.toLowerCase)) col(n).cast(target(n))
-         else lit(null).cast(target(n))).as(n)): _*)
-    }.reduce(_.unionByName(_))
-  }
-
-  private def pipelineVerbForm(toks: List[String]): Boolean =
-    toks.lengthCompare(3) >= 0 &&
-      toks(1).headOption.exists(c => c.isLetter || c == '_') &&
-      toks(1).forall(c => c.isLetterOrDigit || c == '_') &&
-      toks(2).equalsIgnoreCase("by")
-
-  /** `ungroup t` / `ungroup t on c1, c2` — bare-ident table, then end
-    * or `on` (so a user def named ungroup keeps its call form). */
-  private def ungroupForm(toks: List[String]): Boolean =
-    toks.lengthCompare(2) >= 0 &&
-      toks(1).headOption.exists(c => c.isLetter || c == '_') &&
-      toks(1).forall(c => c.isLetterOrDigit || c == '_') &&
-      (toks.lengthCompare(2) == 0 || toks(2).equalsIgnoreCase("on"))
-
-  /** `bpe t by id on text using merges` → [[graft.llm.TextOps.bpeApply]]
-    * against a published `(rank, left, right)` merge table — the
-    * deployment split, like `lmscore … using census`: train the
-    * tokenizer once, tokenize any corpus against it. The merge table
-    * is a bounded model input (≤10000 rules, the classifier-weights
-    * discipline). */
-  private def runBpe(spark: SparkSession, p: P): DataFrame = {
-    val df = spark.table(p.pop())
-    p.expect("by"); val idCol = p.pop()
-    p.expect("on"); val textCol = p.pop()
-    p.expect("using"); val mt = spark.table(p.pop())
-    require(p.done, s"trailing tokens in bpe: ${p.toks.mkString(" ")}")
-    require(Seq("rank", "left", "right").forall(mt.columns.contains),
-      s"bpe … using needs a (rank, left, right) merge table, " +
-      s"got ${mt.columns.mkString(", ")}")
-    val rows = mt.select(col("rank").cast("long"), col("left"), col("right"))
-      .orderBy("rank").limit(10001).collect()
-    require(rows.nonEmpty && rows.length <= 10000,
-      s"bpe merge table must have 1..10000 rows, got ${rows.length}")
-    graft.llm.TextOps.bpeApply(df, idCol, textCol,
-      rows.map(r => (r.getString(1), r.getString(2))).toSeq)
-  }
-
-  /** `bpetrain t on text at 20 [min 2]` →
-    * [[graft.llm.TextOps.bpeTrain]]: learn the merge table itself from
-    * the corpus (one corpus pass for the word census, then
-    * vocab-bounded rounds). Completes the tokenizer train/deploy loop
-    * in the dialect: bpetrain on the reference corpus, `bpe … using`
-    * everywhere else. */
-  private def runBpeTrain(spark: SparkSession, p: P): DataFrame = {
-    val df = spark.table(p.pop())
-    p.expect("on"); val textCol = p.pop()
-    p.expect("at")
-    val n = {
-      val t = p.pop()
-      require(t.forall(_.isDigit) && t.toInt >= 1 && t.toInt <= 10000,
-        s"bpetrain … at needs a merge count in 1..10000, got $t")
-      t.toInt
-    }
-    val minC = if (p.peekIs("min")) {
-      p.pop(); val t = p.pop()
-      require(t.forall(_.isDigit) && t.toLong >= 1,
-        s"bpetrain … min needs a positive integer, got $t")
-      t.toLong
-    } else 2L
-    require(p.done, s"trailing tokens in bpetrain: ${p.toks.mkString(" ")}")
-    graft.llm.TextOps.bpeTrain(df, textCol, n, minC)
-  }
-
-  /** `cap t by strata at 40 on key` → [[graft.llm.Pipeline.capPerStratum]]:
-    * the absolute per-stratum ceiling (≤ N rows per stratum, the rows
-    * that sort first by md5(key) — deterministic, engine-portable). */
-  private def runCap(spark: SparkSession, p: P): DataFrame = {
-    val df = spark.table(p.pop())
-    p.expect("by"); val strataCol = p.pop()
-    p.expect("at")
-    val n = {
-      val t = p.pop()
-      require(t.forall(_.isDigit) && t.toInt > 0,
-        s"cap … at needs a positive row ceiling, got $t")
-      t.toInt
-    }
-    p.expect("on"); val keyCol = p.pop()
-    require(p.done, s"trailing tokens in cap: ${p.toks.mkString(" ")}")
-    graft.llm.Pipeline.capPerStratum(df, col(strataCol), col(keyCol).cast("string"), n)
+  /** Parse and check one verb statement without lowering it (no table
+    * lookup, no Spark job); returns the verb's name. */
+  private[graft] def checkVerb(statement: String): String = {
+    val toks = lex(statement)
+    val v = verbOf(toks).getOrElse(throw new IllegalArgumentException(
+      s"not a pipeline verb statement: $statement"))
+    parseVerb(v, toks)
+    v.name
   }
 
   /** `insert into t values (…), (…)` / `upsert into t key k values …` —

@@ -1614,6 +1614,105 @@ class KerfSqlSpec extends SparkSpec {
     }
   }
 
+  test("verb grammar: every cut of every verb program fails naming the verb and clause") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_verb_cuts").toString
+    val p = s"'$dir/p'"
+    // one valid program per pipeline verb: `|` splits the head from each
+    // clause, `?` marks an optional clause (the table names are never
+    // looked up — a cut must fail in the parser)
+    val programs = Seq(
+      "dedup t | by id | on text | ?order a",
+      "neardup t | by id | on text | ?edit 2 | ?prefix 4 | ?keep | best s | ?order a",
+      "neardup t | by id | on wav | ?envelope | ?within 0.5",
+      s"neardup t | by id | on text | ?against $p | ?within 0.5",
+      s"neardup t | by id | on text | ?into $p",
+      "semdedup t | by id | on v | ?within 0.9 | ?clusters 8 | ?keep | ?best s | ?order a",
+      "chunk t | by id | on text | size 4 | ?overlap 2",
+      "lmscore t | by id | on text | ?using m",
+      "bpe t | by id | on text | using m",
+      "bpetrain t | on text | at 6 | ?min 2",
+      "census t | by id | on text",
+      "drift a | against b | ?top 5",
+      "classify t | by id | on text | ?using w | ?dim 16 | ?scale 100",
+      "classifytrain t | by id | on text | label y | ?dim 16 | ?epochs 2 | ?scale 100",
+      s"index t | by id | on v | at $p | ?lists 8 | ?pq 8 16",
+      s"index t | by id | on v | at $p | ?lists 8 | ?half",
+      s"index t | by id | on v | at $p | ?append",
+      s"probe $p | with q | by id | on v | top 1 | ?probes 2 | ?rerank 8 | ?using o",
+      "sample t | by id | at '29'",
+      "shard t | by id | into 4",
+      "cap t | by s | at 5 | on id",
+      "top t | by k | at 3 | order v",
+      s"compact $p | ?by a | ?sort b | ?into 2",
+      s"vacuum $p",
+      s"rollup $p | ?append t | by k | on v",
+      "pivot t | by k | on p | in ('x', 2) | agg sum(v)",
+      "unpivot t | by k | on (x, y) | as n, v",
+      "ungroup t | ?on a",
+      "uj a, b")
+    def toks(s: String): Seq[String] =
+      """'[^']*'|[A-Za-z_][A-Za-z0-9_]*|\d+(?:\.\d+)?|[(),]""".r.findAllIn(s).toSeq
+    val verbs = programs.map(_.takeWhile(_ != ' ')).toSet
+    assert(KerfSql.verbNames.toSet == verbs,
+      s"verbs without a program: ${KerfSql.verbNames.toSet -- verbs}")
+    def failsNaming(stmt: String, verb: String, clause: String): Unit =
+      // both dispatch sites: the statement and the assignment form
+      Seq(stmt, s"r: $stmt").foreach { s =>
+        val e = intercept[IllegalArgumentException](KerfSql.run(spark, s))
+        assert(e.getMessage.contains(verb) && e.getMessage.contains(s"`$clause`"),
+          s"`$s` failed without naming $verb and `$clause`: ${e.getMessage}")
+      }
+    val group = "verb_grammar_cuts"
+    spark.sparkContext.setJobGroup(group, group)
+    try {
+      for (prog <- programs) {
+        val verb = prog.takeWhile(_ != ' ')
+        // each segment's tokens, its clause name and whether it is required;
+        // the head's name is its role: a table list, a path or a table
+        val segs = prog.split(" \\| ").toSeq.zipWithIndex.map { case (seg, i) =>
+          val ts = toks(seg.stripPrefix("?"))
+          val name =
+            if (i > 0) ts.head
+            else if (ts(1).startsWith("'")) "path"
+            else if (ts.lift(2).contains(",")) "tables"
+            else "table"
+          (ts, name, !seg.startsWith("?"))
+        }
+        val all = segs.flatMap(_._1)
+        assert(KerfSql.checkVerb(all.mkString(" ")) == verb, prog)
+        // the head shape is the first three tokens (`verb t by`,
+        // `verb 'path' kw`, `uj t1 ,`): cut after it, short of the end
+        val starts = segs.map(_._1.length).scanLeft(0)(_ + _)
+        for (k <- 3 until all.length) {
+          val cut = all.take(k).mkString(" ")
+          starts.indexOf(k) match {
+            case s if s > 0 && !segs(s)._3 => assert(KerfSql.checkVerb(cut) == verb, cut)
+            case s if s > 0 => failsNaming(cut, verb, segs(s)._2)
+            case _ => failsNaming(cut, verb, segs(starts.lastIndexWhere(_ < k))._2)
+          }
+        }
+      }
+      // out-of-range ints and non-numeric numbers name the clause too
+      failsNaming("chunk t by id on text size 99999999999", "chunk", "size")
+      failsNaming("cap t by id at 99999999999 on id", "cap", "at")
+      failsNaming("neardup t by id on text within abc", "neardup", "within")
+      failsNaming("classify t by id on text dim 2000000", "classify", "dim")
+      failsNaming("shard t by id into 0", "shard", "into")
+      assert(spark.sparkContext.statusTracker.getJobIdsForGroup(group).isEmpty)
+    } finally spark.sparkContext.clearJobGroup()
+  }
+
+  test("vacuum assigns like the other table-valued verbs") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_kerf_vac_as").toString
+    graft.io.Folio.appendWithPromotion(Seq((1L, 1.0)).toDF("k", "v"), s"$dir/f")
+    graft.io.Folio.upsertPublish(Seq((1L, 9.0)).toDF("k", "v"), s"$dir/f", Seq("k"))
+    new java.io.File(s"$dir/f/v00000000").mkdirs() // a superseded-era leftover
+    val got = KerfSql.run(spark, s"r: vacuum '$dir/f'; select removed from r")
+      .collect().map(_.getString(0)).toSeq
+    assert(got == Seq("v00000000"), s"got $got")
+  }
+
   test("reserved literals (lexer.h:101-102): true/false/inf/infinity/nan/null/nil") {
     def one(prog: String) = KerfSql.run(spark, prog).collect()(0)
     assert(one("true").getBoolean(0))

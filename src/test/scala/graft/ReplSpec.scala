@@ -120,6 +120,14 @@ class ReplSpec extends SparkSpec {
     assert(bare.contains("select"), s"transcript:\n$bare")
   }
 
+  test("\\t completion offers every pipeline verb from the dialect's verb table") {
+    val t = transcript("\\t cla", "\\q")
+    assert(t.contains("classify classifytrain"), s"transcript:\n$t")
+    val all = Repl.completions(spark, new sql.KerfSql.Interp(spark), "")
+    assert(sql.KerfSql.verbNames.forall(all.contains),
+      s"missing: ${sql.KerfSql.verbNames.filterNot(all.contains)}")
+  }
+
   test("\\s / \\l: workspace save and load round-trip through the live session") {
     import org.apache.spark.sql.functions.col
     val dir = java.nio.file.Files.createTempDirectory("graft_repl_ws").toString
