@@ -2180,7 +2180,7 @@ object KerfSql {
         case name if toks.lengthCompare(1) > 0 && toks(1) == ":" &&
                      name.matches("[A-Za-z_][A-Za-z0-9_.]*") =>
           p.pop(); p.pop() // name :
-          val verb = verbOf(p.toks)
+          val rhsVerb = verbOf(p.toks)
           if (p.peekIs("<<")) {
             // `x: << 'path'` — read back (slop.h:1037); promotion-aware,
             // so a folio published by appendWithPromotion resolves to
@@ -2262,10 +2262,10 @@ object KerfSql {
             require(p.done, s"trailing tokens in assignment: ${p.toks.mkString(" ")}")
             df.createOrReplaceTempView(name)
             last = Left(df)
-          } else if (verb.isDefined) {
+          } else if (rhsVerb.isDefined) {
             // table-valued pipeline verbs assign like a select: the
             // result registers as a temp view for later `from` clauses
-            val df = verb.get.run(spark, p.toks)
+            val df = rhsVerb.get.run(spark, p.toks)
             df.createOrReplaceTempView(name)
             last = Left(df)
           } else if (p.peekIs("meta") && p.toks.lengthCompare(2) == 0 &&
