@@ -2,20 +2,26 @@ package graft
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
-/** Accumulates task-level execution metrics between per-query snapshots
-  * so a bench outlier is ATTRIBUTABLE (spill? GC? memory pressure?)
-  * instead of adjudicated by re-running. Counters are cumulative;
+/** Accumulates execution metrics between per-query snapshots so a bench
+  * outlier is ATTRIBUTABLE (spill? GC? memory pressure? more jobs?)
+  * instead of adjudicated by re-running. Jobs started and stages
+  * completed are steal-immune: host contention inflates seconds but not
+  * how many jobs and stages a plan runs. Counters are cumulative;
   * [[snapshot]] diffs against the caller's previous snapshot. */
-private class BenchListener extends SparkListener {
+private[graft] class BenchListener extends SparkListener {
+  val jobs = new AtomicLong
+  val stages = new AtomicLong     // completed stages
   val spill = new AtomicLong      // memory+disk bytes spilled
   val gcMs = new AtomicLong       // executor JVM GC time
   val shufRead = new AtomicLong   // shuffle bytes read
   val shufWrite = new AtomicLong  // shuffle bytes written
   val tasks = new AtomicLong
   @volatile var peak = 0L         // max per-task peakExecutionMemory, window-local
+  override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+  override def onStageCompleted(s: SparkListenerStageCompleted): Unit = stages.incrementAndGet()
   override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
     val m = t.taskMetrics
     if (m != null) {
@@ -27,8 +33,10 @@ private class BenchListener extends SparkListener {
       if (m.peakExecutionMemory > peak) peak = m.peakExecutionMemory
     }
   }
-  case class Snap(spill: Long, gcMs: Long, shufRead: Long, shufWrite: Long, tasks: Long)
-  def snapshot(): Snap = Snap(spill.get, gcMs.get, shufRead.get, shufWrite.get, tasks.get)
+  case class Snap(spill: Long, gcMs: Long, shufRead: Long, shufWrite: Long, tasks: Long,
+                  jobs: Long, stages: Long)
+  def snapshot(): Snap =
+    Snap(spill.get, gcMs.get, shufRead.get, shufWrite.get, tasks.get, jobs.get, stages.get)
   def resetPeak(): Unit = peak = 0L
 }
 
@@ -96,7 +104,8 @@ object Bench {
         s"""{"ms":${math.round(sec * 1000)},"spillMB":${mb(after.spill - before.spill)},""" +
         s""""gcMs":${after.gcMs - before.gcMs},"peakMB":${mb(listener.peak)},""" +
         s""""srMB":${mb(after.shufRead - before.shufRead)},"swMB":${mb(after.shufWrite - before.shufWrite)},""" +
-        s""""tasks":${after.tasks - before.tasks}$stagesJson}"""
+        s""""tasks":${after.tasks - before.tasks},"jobs":${after.jobs - before.jobs},""" +
+        s""""stagesRun":${after.stages - before.stages}$stagesJson}"""
       (name, sec, attr)
     }
 

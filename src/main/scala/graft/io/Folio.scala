@@ -536,7 +536,8 @@ object Folio {
     val keyCols = partitionCols.map(col)
     // z-value is STAGED as a column (withZValue) — the single-Column
     // form replicates the bucket when-tree per interleaved bit and pays
-    // ~13 s of Janino compile time at bits=8 (StorageScalingBench)
+    // ~13 s of Janino compile time at bits=8 (SCALING.md "Folio
+    // compaction + Z-order")
     val (working, zv) =
       if (zorderCols.isEmpty) (df, None)
       else { val (staged, name) = withZValue(df, zorderCols); (staged, Some(col(name))) }
@@ -703,10 +704,10 @@ object Folio {
     * per bit (the interleave needs bit i of the bucket), so at bits=8 the
     * generated expression holds 8 copies of a 255-node tree per column
     * and Janino pays ~13 s of COMPILE time before the first row
-    * (measured, StorageScalingBench — flat at every data size). Staging
-    * makes each tree appear once (>1 downstream reference blocks
-    * CollapseProject, the SCALING.md discipline); the interleave then
-    * reads cheap column refs. Returns the frame plus the z column name. */
+    * (measured, SCALING.md "Folio compaction + Z-order" — flat at every
+    * data size). Staging makes each tree appear once (>1 downstream
+    * reference blocks CollapseProject, the SCALING.md discipline); the
+    * interleave then reads cheap column refs. Returns the frame plus the z column name. */
   def withZValue(df: DataFrame, cols: Seq[String], bits: Int = 8): (DataFrame, String) = {
     val (buckets, ncols) = zBuckets(df, cols, bits)
     val staged = buckets.zipWithIndex.foldLeft(df) { case (d, (b, j)) =>

@@ -156,9 +156,9 @@ object Pipeline {
     * tunes how much of the corpus pays the confirm-join shuffle.
     * Driver state: the serialized filter (capped via `fpp`), same
     * documented-collect class as the IVF centroid matrix.
-    * Crossover (measured, DecontamScalingBench): when the benchmark IS
-    * broadcastable the two extra bench passes buy nothing — use
-    * [[contamination]] there; this path wins once the confirm join
+    * Crossover (measured, SCALING.md "Corpus pipeline", q106): when the
+    * benchmark IS broadcastable the two extra bench passes buy nothing —
+    * use [[contamination]] there; this path wins once the confirm join
     * would otherwise shuffle every corpus shingle. */
   def decontaminate(corpus: DataFrame, benchmark: DataFrame,
                     idCol: String, textCol: String, n: Int = 3,

@@ -1974,14 +1974,15 @@ object KerfSql {
 
     def execBlock(toks: List[String]): Unit = splitTop(toks).foreach(execStmt)
 
-    def execStmt(toks: List[String]): Unit = {
-      if (toks.isEmpty) return
+    /** The frame of a table-valued statement, or None when `toks` is
+      * not one. The statement site and the `name: stmt` site both
+      * dispatch here, so a head cannot work at one and not the other. */
+    def tableValued(toks: List[String]): Option[DataFrame] = {
       val p = new P(toks)
-      val verb = verbOf(toks)
-      toks.head.toLowerCase match {
-        case "select" => p.pop(); last = Left(runSelect(spark, p, vars.toMap, funcs.toMap))
-        case "explain" if toks.lengthCompare(2) >= 0 &&
-            toks(1).equalsIgnoreCase("select") =>
+      lazy val verb = verbOf(toks)
+      toks.headOption.fold("")(_.toLowerCase) match {
+        case "select" => p.pop(); Some(runSelect(spark, p, vars.toMap, funcs.toMap))
+        case "explain" if toks.lift(1).exists(_.equalsIgnoreCase("select")) =>
           // `explain select …` — the REPL's plan window: the formatted
           // Catalyst physical plan as a one-row frame, so a dialect
           // user can check pushdown/broadcast/codegen without leaving
@@ -1989,24 +1990,37 @@ object KerfSql {
           p.pop(); p.pop()
           val df = runSelect(spark, p, vars.toMap, funcs.toMap)
           import spark.implicits._
-          last = Left(Seq(df.queryExecution.explainString(
+          Some(Seq(df.queryExecution.explainString(
             org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
             .toDF("plan"))
-        case "update" => p.pop(); last = Left(runUpdate(spark, p, vars.toMap, funcs.toMap))
-        case "delete" => p.pop(); last = Left(runDelete(spark, p, vars.toMap, funcs.toMap))
+        // `u: update t set …` / `kept: delete from t where p` assign the
+        // mutated frame like a select (the reference treats amend
+        // results as values, presented.cc update-returns-table)
+        case "update" => p.pop(); Some(runUpdate(spark, p, vars.toMap, funcs.toMap))
+        case "delete" => p.pop(); Some(runDelete(spark, p, vars.toMap, funcs.toMap))
         case h @ ("insert" | "upsert") =>
-          p.pop(); last = Left(runMerge(spark, p, h == "upsert", vars.toMap, funcs.toMap))
+          p.pop(); Some(runMerge(spark, p, h == "upsert", vars.toMap, funcs.toMap))
         // pipeline verbs: one table, see `pipelineVerbs`
-        case _ if verb.isDefined => last = Left(verb.get.run(spark, toks))
+        case _ if verb.isDefined => Some(verb.get.run(spark, toks))
         // `meta t` — exactly two tokens so `meta(x)` stays a user call
         case "meta" if toks.lengthCompare(2) == 0 &&
             toks(1).matches("[A-Za-z_][A-Za-z0-9_]*") =>
-          p.pop(); last = Left(runMeta(spark, p))
+          p.pop(); Some(runMeta(spark, p))
         // `rexec 'host:port' 'program'` — Kerf IPC: ship the program,
         // get the value (path-first quoted shape like compact/probe)
         case "rexec" if toks.lengthCompare(3) >= 0 &&
             (toks(1).startsWith("'") || toks(1) == "[") =>
-          p.pop(); last = Left(runRexec(spark, p))
+          p.pop(); Some(runRexec(spark, p))
+        case _ => None
+      }
+    }
+
+    def execStmt(toks: List[String]): Unit = {
+      if (toks.isEmpty) return
+      val table = tableValued(toks)
+      if (table.isDefined) { last = Left(table.get); return }
+      val p = new P(toks)
+      toks.head.toLowerCase match {
         // `set order kerf|ansi` / `set eq kerf|ansi` — SESSION-WIDE
         // semantic modes (grade.cc:15–26 FLOAT_NANS_COMPARE_AS_SMALLEST
         // ordering; test.cc:102–108 null==NaN + epsilon equality — the
@@ -2180,7 +2194,6 @@ object KerfSql {
         case name if toks.lengthCompare(1) > 0 && toks(1) == ":" &&
                      name.matches("[A-Za-z_][A-Za-z0-9_.]*") =>
           p.pop(); p.pop() // name :
-          val rhsVerb = verbOf(p.toks)
           if (p.peekIs("<<")) {
             // `x: << 'path'` — read back (slop.h:1037); promotion-aware,
             // so a folio published by appendWithPromotion resolves to
@@ -2224,85 +2237,35 @@ object KerfSql {
             require(p.done, s"trailing tokens after <<: ${p.toks.mkString(" ")}")
             df.createOrReplaceTempView(name)
             last = Left(df)
-          } else if (p.peekIs("select")) {
+          } else tableValued(p.toks) match {
             // table-valued variable: the result registers as a temp view,
             // so later statements can `from` it by name
-            p.pop()
-            val df = runSelect(spark, p, vars.toMap)
-            require(p.done, s"trailing tokens in assignment: ${p.toks.mkString(" ")}")
-            df.createOrReplaceTempView(name)
-            last = Left(df)
-          } else if (p.peekIs("delete")) {
-            // table-valued delete: `slim: delete c1, c2 from t` (column
-            // drop) or `kept: delete from t where p` (row filter)
-            p.pop()
-            val df = runDelete(spark, p, vars.toMap)
-            require(p.done, s"trailing tokens in assignment: ${p.toks.mkString(" ")}")
-            df.createOrReplaceTempView(name)
-            last = Left(df)
-          } else if (p.peekIs("update")) {
-            // table-valued update (r18, found by the mutation fuzz ask):
-            // `u: update t set c = e where p` registers the updated
-            // frame, like delete — a mutate-then-select program can then
-            // `from u`. The reference treats amend results as values
-            // (presented.cc update-returns-table semantics); only the
-            // delete face had the assignable form before.
-            p.pop()
-            val df = runUpdate(spark, p, vars.toMap, funcs.toMap)
-            require(p.done, s"trailing tokens in assignment: ${p.toks.mkString(" ")}")
-            df.createOrReplaceTempView(name)
-            last = Left(df)
-          } else if ((p.peekIs("insert") || p.peekIs("upsert")) &&
-                     p.toks.lengthCompare(2) >= 0 &&
-                     p.toks(1).equalsIgnoreCase("into")) {
-            // table-valued merge: `m: insert into t values (…)` /
-            // `m: upsert into t key k select …` assign like a select
-            val h = p.pop().toLowerCase
-            val df = runMerge(spark, p, h == "upsert", vars.toMap, funcs.toMap)
-            require(p.done, s"trailing tokens in assignment: ${p.toks.mkString(" ")}")
-            df.createOrReplaceTempView(name)
-            last = Left(df)
-          } else if (rhsVerb.isDefined) {
-            // table-valued pipeline verbs assign like a select: the
-            // result registers as a temp view for later `from` clauses
-            val df = rhsVerb.get.run(spark, p.toks)
-            df.createOrReplaceTempView(name)
-            last = Left(df)
-          } else if (p.peekIs("meta") && p.toks.lengthCompare(2) == 0 &&
-                     p.toks(1).matches("[A-Za-z_][A-Za-z0-9_]*")) {
-            p.pop()
-            val df = runMeta(spark, p)
-            df.createOrReplaceTempView(name)
-            last = Left(df)
-          } else if (p.peekIs("rexec") && p.toks.lengthCompare(3) >= 0 &&
-                     (p.toks(1).startsWith("'") || p.toks(1) == "[")) {
-            p.pop()
-            val df = runRexec(spark, p)
-            df.createOrReplaceTempView(name)
-            last = Left(df)
-          } else {
-            val t = parseExpr(p, env)
-            require(p.done, s"trailing tokens in assignment: ${p.toks.mkString(" ")}")
-            // eager (REPL) semantics. Spans are already driver constants —
-            // rebinding through spanT keeps the span TAG, so `sp: 1d2h;
-            // ts + sp` still routes through calendar arithmetic instead of
-            // raw long addition (and the tag survives workspace save).
-            // Dicts rebind via parallel key/value ARRAYS: Kerf dicts are
-            // insertion-ordered, and a collected scala Map drops that
-            // order past 4 entries (HashMap)
-            val bound = t.span match {
-              case Some(sp) => spanT(sp)
-              case None => t.dt match {
-                case MapType(_, _, _) =>
-                  val ks = litOf(evalScalar(spark, T(map_keys(t.col), NullType)))
-                  val vs = litOf(evalScalar(spark, T(map_values(t.col), NullType)))
-                  val vdt = vs.dt match { case ArrayType(e, _) => e; case _ => NullType }
-                  T(map_from_arrays(ks.col, vs.col), MapType(StringType, vdt))
-                case _ => litOf(evalScalar(spark, t))
+            case Some(df) =>
+              df.createOrReplaceTempView(name)
+              last = Left(df)
+            case None =>
+              val t = parseExpr(p, env)
+              require(p.done, s"trailing tokens in assignment: ${p.toks.mkString(" ")}")
+              // eager (REPL) semantics. Spans are already driver constants —
+              // rebinding through spanT keeps the span TAG, so `sp: 1d2h;
+              // ts + sp` still routes through calendar arithmetic instead of
+              // raw long addition (and the tag survives workspace save).
+              // Dicts rebind via parallel key/value ARRAYS: Kerf dicts are
+              // insertion-ordered, and a collected scala Map drops that
+              // order past 4 entries (HashMap)
+              val bound = t.span match {
+                case Some(sp) => spanT(sp)
+                case None => t.dt match {
+                  case MapType(_, _, _) =>
+                    val ks = litOf(evalScalar(spark, T(map_keys(t.col), NullType)))
+                    val vs = litOf(evalScalar(spark, T(map_values(t.col), NullType)))
+                    val vdt = vs.dt match { case ArrayType(e, _) => e; case _ => NullType }
+                    T(map_from_arrays(ks.col, vs.col), MapType(StringType, vdt))
+                  case _ => litOf(evalScalar(spark, t))
+                }
               }
-            }
-            vars(name) = bound
-            last = Right(bound)
+              vars(name) = bound
+              last = Right(bound)
           }
         case _ =>
           val t = parseExpr(p, env)
@@ -3236,6 +3199,7 @@ object KerfSql {
         df.columns.mkString(", "))
       require(cols.size < df.columns.length,
         "delete: cannot drop every column")
+      require(p.done, s"trailing tokens in delete: ${p.toks.mkString(" ")}")
       return df.drop(cols.toSeq: _*)
     }
     p.expect("from")

@@ -13,14 +13,14 @@ import java.util.concurrent.atomic.AtomicLong
   * adjudication gap).
   *
   * Disabled by default: production calls pay one volatile read.
-  * Enabled by the bench (or `-Dgraft.bench.stages=true`). Stage forcing
-  * under the flag may materialize caches that the operator would
+  * The bench enables it for its attribution pass only. Stage forcing
+  * while enabled may materialize caches that the operator would
   * otherwise populate lazily inside its final action — same total work,
-  * earlier boundaries — so numbers are comparable only with the flag in
+  * earlier boundaries — so numbers are comparable only with timing in
   * the same state.
   */
 object StageTimer {
-  @volatile private var on = java.lang.Boolean.getBoolean("graft.bench.stages")
+  @volatile private var on = false
   private val acc = new ConcurrentHashMap[String, AtomicLong]()
 
   def enable(): Unit = { on = true }

@@ -1713,6 +1713,34 @@ class KerfSqlSpec extends SparkSpec {
     assert(got == Seq("v00000000"), s"got $got")
   }
 
+  test("every table-valued head assigns the rows its statement returns, program defs in scope") {
+    import spark.implicits._
+    Seq((1L, 10L), (2L, 20L), (3L, 30L)).toDF("a", "v").createOrReplaceTempView("heads_t")
+    val server = graft.sources.RemoteTableServer.start(spark,
+      Map("customer" -> s"$sf/customer.parquet"), enableEval = true)
+    try {
+      val heads = Seq(
+        "select a, sq(v) as b from heads_t where sq(a) > 1",
+        "explain select sq(a) as b from heads_t",
+        "update heads_t set v = sq(v) where sq(a) > 3",
+        "delete from heads_t where sq(a) > 3",
+        "insert into heads_t select a + 3 as a, sq(v) as v from heads_t",
+        "upsert into heads_t key a select a, sq(v) as v from heads_t where sq(a) > 3",
+        "shard heads_t by a into 2",
+        "meta heads_t",
+        s"rexec '${server.evalHandle}' 'select count(*) as n from customer'")
+      val prelude = "def sq(x) {x * x}; "
+      // an explained plan names its attributes with per-analysis ids
+      def rows(prog: String): Seq[String] = KerfSql.run(spark, prelude + prog).collect()
+        .map(_.toString.replaceAll("#\\d+", "#")).toSeq.sorted
+      heads.foreach { stmt =>
+        val direct = rows(stmt)
+        assert(direct.nonEmpty, stmt)
+        assert(rows(s"r: $stmt; select * from r") == direct, stmt)
+      }
+    } finally server.stop()
+  }
+
   test("reserved literals (lexer.h:101-102): true/false/inf/infinity/nan/null/nil") {
     def one(prog: String) = KerfSql.run(spark, prog).collect()(0)
     assert(one("true").getBoolean(0))

@@ -74,6 +74,28 @@ class SingleTaskSortSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
   }
 
+  test("the bench listener counts q11's jobs and stages like a plain listener") {
+    val bench = new BenchListener
+    val stages = new java.util.concurrent.atomic.AtomicInteger
+    val plain = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        stages.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(bench)
+    sc.addSparkListener(plain)
+    try {
+      org.apache.spark.GraftBenchGlue.drainListeners(sc)
+      val before = bench.snapshot()
+      stages.set(0)
+      val (_, _, jobs) = run(session(), "q11_window_rank")
+      val after = bench.snapshot()
+      assert(after.jobs - before.jobs == jobs)
+      assert(after.stages - before.stages == stages.get && stages.get >= jobs)
+      assert(jobs == 2)
+    } finally { sc.removeSparkListener(bench); sc.removeSparkListener(plain) }
+  }
+
   test("a top-K, a sort over a scan and a streaming plan keep their plans; local rows do not") {
     val (_, topK, _) = run(spark, "q03_topk")
     assert(collect(topK) { case t: TakeOrderedAndProjectExec => t }.size == 1, topK)
