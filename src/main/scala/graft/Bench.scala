@@ -62,23 +62,15 @@ object Bench {
       case e: Throwable =>
         System.err.println(s"BENCH WARMUP SKIPPED: ${e.getMessage}")
     }
-    // optional comma-separated prefix filter for local iteration, e.g.
-    // SPARK_GRAFT_ONLY=q29,q33 — driver runs unfiltered. A set-but-EMPTY
-    // var (unset shell interpolation) and stray empty tokens ('q29,,')
-    // are NOT a filter: "" prefix-matches everything, which would run
-    // the full suite yet suppress the official artifact writes below
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty)
+    // optional comma-separated query filter for local iteration, e.g.
+    // SPARK_GRAFT_ONLY=q29,q33 (see SparkEntry.select); the official
+    // record is unfiltered. A set-but-EMPTY var (unset shell interpolation)
+    // is NOT a filter: it runs the full suite and writes the official artifacts
+    val only = sys.env.getOrElse("SPARK_GRAFT_ONLY", "").split(",").toSeq
     // a throwing query must NOT report as a fast success: its name lands
     // in "failures" (and on stderr) so a regression can't shrink the total
     val failures = scala.collection.mutable.LinkedHashSet[String]()
-    val queryList = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
-    // a typo'd filter must not print a green valid:true 0.0s headline —
-    // the exact silent-green trap Verify guards with require(nonEmpty)
-    require(queryList.nonEmpty,
-      s"SPARK_GRAFT_ONLY=${only.fold("")(_.mkString(","))} matches no queries")
+    val queryList = SparkEntry.select(only)
 
     // One timed sweep over the suite. Returns (name, sec, attributionJson).
     def runPass(): Seq[(String, Double, String)] = queryList.map { case (name, fn) =>
@@ -223,7 +215,7 @@ object Bench {
     // a SPARK_GRAFT_ONLY iteration run must not overwrite the official
     // full-suite records with subset data (an adjudicator reading the
     // file later would see a tiny "suite" with no marker a filter ran)
-    if (only.isEmpty) {
+    if (only.forall(_.trim.isEmpty)) {
       // the unsuffixed filenames are the OFFICIAL sf0.1 lane the
       // round-over-round diffs read; a bench at any other scale factor
       // (the sf1 sweep, a local sf0.01 iteration) writes `.<sfname>`

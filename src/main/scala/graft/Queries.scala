@@ -1240,22 +1240,14 @@ object Queries {
     val base = Scratch.dir(s, "fed", new java.io.File(dir).getName)
     val li = Tables.lineitem(s, dir)
     // the two site exports are independent jobs on disjoint paths —
-    // submit them CONCURRENTLY (guide §2.6: overlap independent jobs so
-    // the second job's tasks back-fill the first's tail) instead of
-    // paying two sequential write-job latencies
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val wa = Future {
+    // submit them CONCURRENTLY (the second job's tasks back-fill the
+    // first's tail) instead of paying two sequential write-job latencies
+    ops.Par.both(
       li.filter(col("l_orderkey") % 2 === 0)
-        .write.mode("overwrite").parquet(s"$base/site_a")
-    }
-    val wb = Future {
+        .write.mode("overwrite").parquet(s"$base/site_a"),
       li.filter(col("l_orderkey") % 2 =!= 0)
         .withColumn("l_linenumber", col("l_linenumber").cast("long"))
-        .write.mode("overwrite").parquet(s"$base/site_b")
-    }
-    Await.result(wa, Duration.Inf); Await.result(wb, Duration.Inf)
+        .write.mode("overwrite").parquet(s"$base/site_b"))
     io.Folio.federatedRead(s, Seq(s"$base/site_a", s"$base/site_b"))
       .filter(col("l_discount") >= 0.05)
       .groupBy(col("l_returnflag"))
@@ -1540,15 +1532,12 @@ object Queries {
       col("ts_us"), col("value").cast("string")).as("value"))
     // two feed partitions, populated by a Spark text write (marker/crc
     // files are ignored by the source's chunk listing); disjoint paths →
-    // concurrent submission (guide §2.6), halving the setup's job latency
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val w0 = Future { frames.filter(xxhash64(col("value")) % 2 === 0)
-      .write.mode("overwrite").text(s"$feedDir/p0") }
-    val w1 = Future { frames.filter(xxhash64(col("value")) % 2 =!= 0)
-      .write.mode("overwrite").text(s"$feedDir/p1") }
-    Await.result(w0, Duration.Inf); Await.result(w1, Duration.Inf)
+    // concurrent submission, halving the setup's job latency
+    ops.Par.both(
+      frames.filter(xxhash64(col("value")) % 2 === 0)
+        .write.mode("overwrite").text(s"$feedDir/p0"),
+      frames.filter(xxhash64(col("value")) % 2 =!= 0)
+        .write.mode("overwrite").text(s"$feedDir/p1"))
     val raw = s.readStream.format("graft.sources.ChunkFeedSource")
       .option("path", feedDir).load()
     val parsed = raw.select(split(col("line"), ",").as("f"))
@@ -2062,15 +2051,12 @@ object Queries {
   val q119_remote_folio: Q = (s, dir) => {
     val base = Scratch.dir(s, "remote", new java.io.File(dir).getName)
     val cust = Tables.customer(s, dir)
-    // disjoint-path site exports submitted concurrently (guide §2.6)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val wa = Future { cust.filter(col("c_custkey") % 2 === 0)
-      .write.mode("overwrite").parquet(s"$base/site_a") }
-    val wb = Future { cust.filter(col("c_custkey") % 2 =!= 0)
-      .write.mode("overwrite").parquet(s"$base/site_b") }
-    Await.result(wa, Duration.Inf); Await.result(wb, Duration.Inf)
+    // disjoint-path site exports submitted concurrently
+    ops.Par.both(
+      cust.filter(col("c_custkey") % 2 === 0)
+        .write.mode("overwrite").parquet(s"$base/site_a"),
+      cust.filter(col("c_custkey") % 2 =!= 0)
+        .write.mode("overwrite").parquet(s"$base/site_b"))
     val srv = sources.RemoteTableServer.sharedFor(s, "site_b", s"$base/site_b")
     io.Folio.federatedRead(s,
         Seq(s"$base/site_a", s"remote://127.0.0.1:${srv.port}/site_b"))

@@ -6,19 +6,13 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // PREFIX filter, same semantics as Bench's SPARK_GRAFT_ONLY (an
-    // exact-match filter here once made `Verify … q29` silently run
-    // nothing and exit green)
-    val only = args.drop(2).toSet
+    // optional query filter, the same as Bench's SPARK_GRAFT_ONLY
+    val picked = SparkEntry.select(args.drop(2).toSeq)
     val spark = Engine.session()
     // preflight: one loud named failure on fixture schema drift, instead
     // of 27 scattered per-query analysis errors (round-9 lesson)
     FixtureCanary.check(spark, sfDir)
     new java.io.File(outDir).mkdirs()
-    val picked = SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only.exists(name.startsWith) }
-    require(only.isEmpty || picked.nonEmpty,
-      s"no query matches filter ${only.mkString(",")}")
     picked.foreach { case (name, fn) =>
       // clear any PREVIOUS run's output first: a query that fails before
       // its overwrite would otherwise leave stale parquet behind, and the

@@ -892,18 +892,11 @@ object Folio {
   /** Persist a set of named tables — the Kerf Tree snapshot
     * (/root/reference/cores.h:72) as a directory of Parquet datasets.
     * Each table writes to its OWN directory, so the write jobs are
-    * independent — submitted concurrently (guide §2.6: later jobs
-    * back-fill earlier jobs' task tails) instead of paying one
-    * write-job latency per table. */
-  def workspaceSave(tables: Map[String, DataFrame], path: String): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val writes = tables.toSeq.map { case (name, df) =>
-      Future { df.write.mode(SaveMode.Overwrite).parquet(s"$path/$name") }
-    }
-    writes.foreach(Await.result(_, Duration.Inf))
-  }
+    * independent — submitted concurrently through [[graft.ops.Par]]
+    * instead of paying one write-job latency per table. */
+  def workspaceSave(tables: Map[String, DataFrame], path: String): Unit =
+    graft.ops.Par.all(tables.toSeq.map { case (name, df) =>
+      () => df.write.mode(SaveMode.Overwrite).parquet(s"$path/$name") }: _*)
 
   /** Workspace save INCLUDING program state (the reference's
     * workspace_save persists the whole Kerf Tree — scalars and lambdas,

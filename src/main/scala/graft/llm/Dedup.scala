@@ -636,29 +636,25 @@ object Dedup {
     // manifests NO dir — the tag, not a dir, is what makes re-delivery
     // exactly-once, and N all-dup batches must not leave N empty dirs
     // for every future probe to list and footer-read
-    val empty = hashed.isEmpty
-    if (!empty) {
+    val empty = try {
+      val empty = hashed.isEmpty
       // bands and sets land in disjoint dirs off the same cached batch —
-      // independent write jobs, submitted concurrently (guide §2.6)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val wBands = Future {
+      // independent write jobs, submitted concurrently
+      if (!empty) graft.ops.Par.both(
         // sorted-by-band files: row-group stats prune band_hash ranges at
         // probe time (the folio sorted-run discipline)
         bandedRows(hashed, numHashes, bands)
           .repartitionByRange(col("band_id"), col("band_hash"))
           .sortWithinPartitions("band_id", "band_hash")
           .write.mode(org.apache.spark.sql.SaveMode.ErrorIfExists)
-          .parquet(s"$bdir/bands")
-      }
-      val wSets = Future {
+          .parquet(s"$bdir/bands"),
         hashed.write.mode(org.apache.spark.sql.SaveMode.ErrorIfExists)
-          .parquet(s"$bdir/sets")
-      }
-      Await.result(wBands, Duration.Inf); Await.result(wSets, Duration.Inf)
-    }
-    hashed.unpersist()
+          .parquet(s"$bdir/sets"))
+      empty
+    } catch { case e: Throwable =>
+      // a failed batch leaves no unmanifested dir behind for vacuum to reap
+      graft.tools.Fs.deleteRecursively(new java.io.File(bdir)); throw e
+    } finally hashed.unpersist()
     val manifest =
       (if (empty) indexManifest(path) else indexManifest(path) :+ bdir)
         .mkString("\n")

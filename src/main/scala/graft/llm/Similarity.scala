@@ -1040,27 +1040,11 @@ object Similarity {
                 m: Int = 8, ksub: Int = 16, rerank: Int = 32,
                 idCol: String = "vec_id", vecCol: String = "embedding",
                 iters: Int = 1): (DataFrame, Seq[DataFrame]) = {
-    import graft.ops.Caches
-    val (cand, own) = Caches.acquire(candidates)
-    // coarse-centroid and PQ-codebook training are INDEPENDENT Lloyd
-    // passes over the same cached candidates — submit them concurrently
-    // (guide §2.6) so the second training's tasks back-fill the first's
-    // collect tail instead of paying two sequential job latencies
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fCentroids = Future { trainCentroids(cand, nLists, idCol, vecCol, iters) }
-    val fBooks = Future { trainPQ(cand, m, ksub, idCol, vecCol, iters) }
-    val centroids = Await.result(fCentroids, Duration.Inf)
-    val books = Await.result(fBooks, Duration.Inf)
+    val (cand, own, centroids, books, coded) =
+      buildIvfPq(candidates, nLists, m, ksub, idCol, vecCol, iters)
     val dsub = books(0)(0).length
     val nl = centroids.length
     val np = math.min(nProbe, nl)
-    // the stored index: (cand_id, list_id, m codes) — no float vectors.
-    // NULL embeddings excluded as in pqTopKPlan (null __adc sorts first).
-    val coded = assignLists(cand.filter(col(vecCol).isNotNull), centroids, idCol, vecCol)
-      .select(col(idCol).as("cand_id"), col("list_id"),
-        pqCodes(col(vecCol), books).as("__codes"))
     val q = queries
       .select(col(idCol).as("q_id"), col(vecCol).as("q_vec"))
       .withColumn("__qsims",
@@ -1095,6 +1079,28 @@ object Similarity {
     (out, if (own) Seq(cand) else Nil)
   }
 
+  /** Acquire `candidates`, train IVF-PQ's coarse centroids and PQ
+    * codebooks on it, and plan the coded index. The two trainings are
+    * INDEPENDENT Lloyd passes over the same cached candidates, so they
+    * run concurrently: the second training's tasks back-fill the first's
+    * collect tail instead of paying two sequential job latencies.
+    * Returns the handle, whether this call owns its cache (released here
+    * when a training throws), both trainings, and the lazy index
+    * `(cand_id, list_id, __codes)` — m codes, no float vectors; NULL
+    * embeddings are excluded as in pqTopKPlan (null __adc sorts first). */
+  private def buildIvfPq(candidates: DataFrame, nLists: Int, m: Int, ksub: Int,
+                         idCol: String, vecCol: String, iters: Int) = {
+    val (cand, own) = graft.ops.Caches.acquire(candidates)
+    val (centroids, books) = try graft.ops.Par.both(
+        trainCentroids(cand, nLists, idCol, vecCol, iters),
+        trainPQ(cand, m, ksub, idCol, vecCol, iters))
+      catch { case e: Throwable => if (own) cand.unpersist(false); throw e }
+    val coded = assignLists(cand.filter(col(vecCol).isNotNull), centroids, idCol, vecCol)
+      .select(col(idCol).as("cand_id"), col("list_id"),
+        pqCodes(col(vecCol), books).as("__codes"))
+    (cand, own, centroids, books, coded)
+  }
+
   /** PERSIST an IVF-PQ index — the on-disk form of the very-large-scale
     * architecture: coarse centroids + PQ codebooks (checkpoint-JSON) and
     * the codes-only corpus PARTITIONED BY `list_id`. A probe composes
@@ -1107,22 +1113,11 @@ object Similarity {
                       iters: Int = 1,
                       idCol: String = "vec_id",
                       vecCol: String = "embedding"): Unit = graft.tools.StageTimer.time("build") {
-    import graft.ops.Caches
-    val (cand, own) = Caches.acquire(candidates)
-    // independent trainings submitted concurrently — see ivfPqTopKPlan
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fCentroids = Future { trainCentroids(cand, nLists, idCol, vecCol, iters) }
-    val fBooks = Future { trainPQ(cand, m, ksub, idCol, vecCol, iters) }
-    val centroids = Await.result(fCentroids, Duration.Inf)
-    val books = Await.result(fBooks, Duration.Inf)
+    val (cand, own, centroids, books, coded) =
+      buildIvfPq(candidates, nLists, m, ksub, idCol, vecCol, iters)
     // stage-and-swap publish — same rationale as [[writeIvfIndex]]
-    graft.io.Folio.publishArtifacts(path) { vdir =>
-      assignLists(cand.filter(col(vecCol).isNotNull), centroids, idCol, vecCol)
-        .select(col(idCol).as("cand_id"), col("list_id"),
-          pqCodes(col(vecCol), books).as("__codes"))
-        .repartition(col("list_id"))
+    try graft.io.Folio.publishArtifacts(path) { vdir =>
+      coded.repartition(col("list_id"))
         .write.mode("overwrite").partitionBy("list_id").parquet(s"$vdir/codes")
       val om = new com.fasterxml.jackson.databind.ObjectMapper()
       java.nio.file.Files.write(
@@ -1131,8 +1126,7 @@ object Similarity {
       java.nio.file.Files.write(
         new java.io.File(vdir, "codebooks.json").toPath,
         om.writeValueAsBytes(books))
-    }
-    if (own) cand.unpersist(false)
+    } finally if (own) cand.unpersist(false)
   }
 
   /** Probe a persisted IVF-PQ index: no training/assignment/encode pass;

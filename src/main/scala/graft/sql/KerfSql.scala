@@ -3218,7 +3218,12 @@ object KerfSql {
     * comes back as a LOCAL frame (REPL-sized by the server's
     * maxEvalRows contract; corpus-scale reads belong on the
     * `remote://` table protocol, where projection/filter/aggregate
-    * push down). `''` escapes a quote inside the shipped program. */
+    * push down). `''` escapes a quote inside the shipped program.
+    *
+    * The scatter form calls its sites through [[graft.ops.Par]]: the
+    * first failing site's error surfaces once every call has ended. A
+    * call has no overall deadline; [[graft.sources.RemoteEval]]'s socket
+    * timeouts bound it (5 s to connect, 600 s of silence on a read). */
   private def runRexec(spark: SparkSession, p: P): DataFrame = {
     // `rexec ['s1', 's2'] 'program'` — SCATTER-GATHER over a folio of
     // sites (presented.h:427–430 "executes queries remotely"): the same
@@ -3236,12 +3241,8 @@ object KerfSql {
       require(progTok.startsWith("'"),
         "rexec: the program must be a quoted string ('' escapes a quote)")
       val prog = unq(progTok)
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.DurationInt
-      implicit val ec: ExecutionContext = ExecutionContext.global
-      val fs = sites.toSeq.map(site =>
-        Future(graft.sources.RemoteEval.call(spark, site, prog)))
-      val dfs = fs.map(Await.result(_, 10.minutes))
+      val dfs = graft.ops.Par.all(sites.toSeq.map(site =>
+        () => graft.sources.RemoteEval.call(spark, site, prog)): _*)
       val first = dfs.head
       dfs.zip(sites).foreach { case (d, site) =>
         require(d.schema == first.schema,

@@ -358,4 +358,32 @@ class DedupIndexSpec extends SparkSpec {
       docs().filter(col("doc_id") < 200).count(),
       "a concurrently-appended batch vanished from the manifest")
   }
+
+  test("a batch whose rows fail mid-write leaves no trace: caches, batch dirs, manifest and jobs as before") {
+    val path = tmp()
+    Dedup.indexAppend(docs().limit(20), "doc_id", "text", path, nh, nb, sn)
+    val sc = spark.sparkContext
+    def batchDirs() = Option(new java.io.File(s"$path/batches").list())
+      .toSeq.flatten.filter(_.startsWith("b_")).toSet
+    val (rdds, dirs, manifest) =
+      (sc.getPersistentRDDs.keySet, batchDirs(), graft.io.Folio.rollupManifest(path))
+    assert(dirs.size == 1 && manifest.size == 1)
+    // row 190 sits in the last of 4 partitions: the emptiness check reads
+    // only the first, so the throw lands in the band and set writes
+    val failing = udf { (id: Long) =>
+      if (id == 190L) throw new IllegalStateException("row 190 fails")
+      Seq(id, id + 1, id + 2)
+    }
+    val bad = spark.range(0, 200, 1, 4)
+      .select(col("id").as("doc_id"), failing(col("id")).as("shh"))
+    val e = intercept[Exception](
+      Dedup.indexAppendSets(bad, path, nh, nb, s"text:$sn"))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("row 190 fails")), e)
+    org.apache.spark.GraftBenchGlue.drainListeners(sc)
+    assert(sc.getPersistentRDDs.keySet == rdds, "the batch cache outlived the failure")
+    assert(batchDirs() == dirs, s"batch dirs: ${batchDirs()} (before: $dirs)")
+    assert(graft.io.Folio.rollupManifest(path) == manifest)
+    assert(sc.statusTracker.getActiveJobIds.isEmpty, "a write job outlived the failure")
+  }
 }

@@ -19,6 +19,18 @@ class QueriesSmokeSpec extends SparkSpec {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
+  test("query filter: a token picks its own name or `<token>_*`, blank tokens are dropped, no match is loud") {
+    val names = SparkEntry.queries.keys.toSeq.sorted
+    def picked(tokens: String*) = SparkEntry.select(tokens).map(_._1)
+    assert(names.contains("q110_kerf_sample") && names.contains("q11_window_rank"))
+    assert(picked("q11", " ", "") == Seq("q11_window_rank"))
+    assert(picked("q110_kerf_sample", "q11_window_rank") ==
+      Seq("q110_kerf_sample", "q11_window_rank"))
+    assert(picked() == names && picked("", " ") == names)
+    intercept[IllegalArgumentException](picked("q11_win"))
+    intercept[IllegalArgumentException](picked("q999"))
+  }
+
   test("every oracle key has a query") {
     assert(Oracles.all.keySet.subsetOf(Queries.all.keySet))
   }
