@@ -2171,7 +2171,7 @@ object Queries {
     * in FolioSpec. */
   val q124_folio_compact: Q = (s, dir) => {
     val base = Scratch.dir(s, "compactq", new java.io.File(dir).getName)
-    val folio = s"$base/f_${System.nanoTime}" // fresh per run (bench runs twice)
+    val folio = s"$base/f_${System.nanoTime}" // fresh per run (the bench runs it once per pass)
     val ev = Tables.events(s, dir).drop("ts")
     // stage attribution (the q113 pattern): this query PHYSICALLY
     // rewrites files — append and compact wall is disk, not plan, so a
@@ -2203,7 +2203,7 @@ object Queries {
     * (time travel) is pinned in FolioSpec. */
   val q125_folio_upsert: Q = (s, dir) => {
     val base = Scratch.dir(s, "upsertq", new java.io.File(dir).getName)
-    val folio = s"$base/f_${System.nanoTime}" // fresh per run (bench runs twice)
+    val folio = s"$base/f_${System.nanoTime}" // fresh per run (the bench runs it once per pass)
     val ev = Tables.events(s, dir).drop("ts")
     io.Folio.appendWithPromotion(ev, folio)
     val corrections = ev.filter(col("event_id") % 50 === 0)

@@ -171,18 +171,11 @@ object Dedup {
                    maxBucket: Int = 64): DataFrame = {
     val (result, caches) = minhashPairsPlan(docs, idCol, textCol,
       numHashes, bands, shingleN, jaccardThreshold, maxBucket)
-    // bench-only stage attribution: force each persisted intermediate at
-    // its boundary so shingle+sign / band+explode / candidate+verify get
-    // separate wall-clock slices (same total work — the seal would have
-    // populated these caches anyway, just inside one undifferentiated
-    // action)
-    if (graft.tools.StageTimer.enabled) {
-      graft.tools.StageTimer.time("shingle") { caches.head.count() }
-      graft.tools.StageTimer.time("band") { caches(1).count() }
-    }
     // the pair list (≪ n²) is materialized eagerly so the shingle/band
     // caches can be RELEASED here instead of pinning executor storage for
-    // the session's lifetime (cache-scope contract, graft.ops.Caches)
+    // the session's lifetime (cache-scope contract, graft.ops.Caches).
+    // The shingle and band caches fill inside this one action, so the
+    // "verify" slice covers the whole cascade
     graft.tools.StageTimer.time("verify") {
       graft.ops.Caches.seal(result, caches: _*)
     }

@@ -624,11 +624,13 @@ object Similarity {
     * but with NO training pass and a STATIC partition-pruned scan — the
     * distinct probed list ids (≤ nLists ints, bounded by construction)
     * become an `isin` literal the planner turns into `PartitionFilters`
-    * (pinned in PlanSpec). */
+    * (pinned in PlanSpec). The "open" stage slice times the driver side
+    * of a probe: version resolution, the model read and the probed-list
+    * collect; the scan runs later, in the caller's action. */
   def ivfTopKIndexed(spark: SparkSession, path: String, queries: DataFrame,
                      k: Int, nProbe: Int = 4,
                      idCol: String = "vec_id", vecCol: String = "embedding",
-                     excludeSelf: Boolean = true): DataFrame = {
+                     excludeSelf: Boolean = true): DataFrame = graft.tools.StageTimer.time("open") {
     // ONE root resolution: model and data from the same immutable
     // version — two resolutions could straddle a concurrent republish
     val root = indexRoot(path)
@@ -997,7 +999,7 @@ object Similarity {
     * table) joins back only for the top-`rerank` exact re-rank. */
   def pqTopKIndexed(spark: SparkSession, path: String, queries: DataFrame,
                     originals: DataFrame, k: Int, rerank: Int = 32,
-                    idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+                    idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = graft.tools.StageTimer.time("open") {
     val root = indexRoot(path) // one resolution (see ivfTopKIndexed)
     val books = readCodebooksFromRoot(root, path)
     val coded = spark.read.parquet(s"$root/codes")
@@ -1136,7 +1138,7 @@ object Similarity {
   def ivfPqTopKIndexed(spark: SparkSession, path: String, queries: DataFrame,
                        originals: DataFrame, k: Int, nProbe: Int = 4,
                        rerank: Int = 32,
-                       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+                       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = graft.tools.StageTimer.time("open") {
     val root = indexRoot(path) // one resolution (see ivfTopKIndexed)
     val centroids = readCentroidsFromRoot(root, path)
     val books = readCodebooksFromRoot(root, path)
@@ -1283,20 +1285,14 @@ object Similarity {
     import graft.ops.Caches
     val (acq, own) = Caches.acquire(df)
     val cand = acq.filter(col(vecCol).isNotNull)
-    // bench attribution (the r14 q122 adjudication gap): train is
-    // eager (Lloyd passes collect centroids) so it times naturally;
-    // assign is forced ONLY under the bench flag — it materializes the
-    // persisted cache the pair join would otherwise fill lazily, same
-    // total work with an earlier boundary — leaving the headline
-    // remainder attributable to the in-cluster pair stage
+    // train is eager (Lloyd passes collect centroids) so it gets its own
+    // slice; assignment fills its cache lazily inside the pair stage
     val centroids = graft.tools.StageTimer.time("train") {
       trainCentroids(cand, nClusters, idCol, vecCol, iters)
     }
     val assigned = assignLists(cand, centroids, idCol, vecCol)
       .select(col(idCol).as("__id"), col(vecCol).as("__v"), col("list_id"))
       .persist(Caches.lvl)
-    if (graft.tools.StageTimer.enabled)
-      graft.tools.StageTimer.time("assign") { assigned.count(); () }
     val oversize = assigned.groupBy(col("list_id"))
       .agg(count(lit(1)).as("n")).filter(col("n") > maxCluster)
     val guarded = assigned.join(broadcast(oversize.select(col("list_id"))),

@@ -31,6 +31,25 @@ class QueriesSmokeSpec extends SparkSpec {
     intercept[IllegalArgumentException](picked("q999"))
   }
 
+  test("stage slices are recorded with no switch set: q124 append/compact, q29 verify") {
+    graft.tools.StageTimer.drain()
+    Queries.all("q124_folio_compact")(spark, sf).count()
+    val folio = graft.tools.StageTimer.drain()
+    assert(Set("append", "compact").subsetOf(folio.keySet), folio)
+    Queries.all("q29_minhash_dedup")(spark, sf).count()
+    val dedup = graft.tools.StageTimer.drain()
+    assert(dedup.contains("verify"), dedup)
+  }
+
+  test("bench pass count: 3 by default, a non-integer or a value below 1 is refused by name") {
+    assert(Bench.passCount(None) == 3)
+    assert(Bench.passCount(Some(" 4 ")) == 4)
+    Seq("", "two", "2.5", "0", "-1").foreach { v =>
+      val e = intercept[IllegalArgumentException](Bench.passCount(Some(v)))
+      assert(e.getMessage.contains("SPARK_GRAFT_BENCH_PASSES"), v)
+    }
+  }
+
   test("every oracle key has a query") {
     assert(Oracles.all.keySet.subsetOf(Queries.all.keySet))
   }
